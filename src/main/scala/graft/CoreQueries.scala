@@ -30,7 +30,7 @@ object CoreQueries {
     // nanosAsLong stays on so a nanos-encoded fixture still reads (as long).
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = graft.io.ParquetMeta.read(spark, s"$dir/$name.parquet")
     if (name == "events" && df.schema.fieldNames.contains("ts"))
       df.withColumn("ts", tsToMicros(df)) else df
   }
@@ -1277,7 +1277,7 @@ object CoreQueries {
       .select(col("event_id"), col("ts"), col("user_id"),
         floor(col("value") * 100).cast("long").as("vc"), col("event_type"))
       .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-    s.read.parquet(tmp)
+    graft.io.ParquetMeta.read(s, tmp)
       .filter(col("event_type").isin("purchase", "error"))
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("vc")).as("sum_vc"),
@@ -1323,7 +1323,7 @@ object CoreQueries {
         view = Ivm.applyDelta(view, batch.withColumn("op", lit(1)),
           Seq("event_type"), spec).localCheckpoint(true)
       }, options = Map("maxFilesPerTrigger" -> "1"))
-    val retract = s.read.parquet(tmp + "/src")
+    val retract = graft.io.ParquetMeta.read(s, tmp + "/src")
       .where(pmod(col("user_id"), lit(5)) === 0)
       .withColumn("op", lit(-1))
     Ivm.applyDelta(view, retract, Seq("event_type"), spec)

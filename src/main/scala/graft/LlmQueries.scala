@@ -31,7 +31,7 @@ object LlmQueries {
 private[graft] object LlmGateUtil {
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    graft.io.ParquetMeta.read(s, s"$dir/$name.parquet")
 
   private[graft] val out = "decimal(38,6)"
 

@@ -79,9 +79,6 @@ object ChFunctions {
   def lpadNum(c: Column, len: Int, pad: String): Column =
     lpad(c.cast("string"), len, pad)
 
-  /** `toString(x)` — `...txt:121,126,130`. */
-  def toStringCh(c: Column): Column = c.cast("string")
-
   /** `toFixedString(s, n)`: ClickHouse fixed-width string. Spark has no
     * fixed-width type; semantics preserved as truncate-or-NUL-pad is not
     * observable through the reference's usage (`...txt:134` uses it only as

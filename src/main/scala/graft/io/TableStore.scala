@@ -14,7 +14,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     so a read-modify-write over the same table (append_where, update)
   *     never reads a half-deleted input — the same reason the reference
   *     stages updates through an `upd_<t>` side table
-  *     (`clickhouse/jdbsChSession.scala:316-329`).
+  *     (`clickhouse/jdbsChSession.scala:316-329`). `read` and `count`
+  *     use footer metadata only ([[ParquetMeta]]): building a read and
+  *     counting rows launch no Spark job, as the reference takes its
+  *     row counts from ClickHouse metadata.
   *   - At cluster scale the same interface maps onto catalog tables
   *     (`saveAsTable` / `insertInto` with dynamic partition overwrite);
   *     nothing in SyncEngine assumes a local filesystem.
@@ -45,7 +48,10 @@ final class ParquetTableStore(val spark: SparkSession, root: String)
   override def exists(table: String): Boolean = fs.exists(dir(table))
 
   override def read(table: String): DataFrame =
-    spark.read.parquet(dir(table).toString)
+    ParquetMeta.read(spark, dir(table).toString)
+
+  override def count(table: String): Long =
+    if (exists(table)) ParquetMeta.rowCount(spark, dir(table).toString) else 0L
 
   /** Stage to a sibling temp dir, then swap. The staging write fully
     * materializes before the old data is touched, so `overwrite(t, f(read(t)))`

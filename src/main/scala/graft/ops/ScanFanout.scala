@@ -47,20 +47,18 @@ object ScanFanout {
     * remote files counted as 1 split each and got a full-table hash
     * shuffle, contradicting the "production plan is UNCHANGED"
     * contract. Unknown size now means "do not fan out", never "assume
-    * tiny". Local file: URIs stat directly; other schemes resolve
-    * through the Hadoop FileSystem API. */
+    * tiny". Every file resolves through the Hadoop FileSystem API, from
+    * the decoded URI: `inputFiles` percent-encodes its paths, and a
+    * `file:` path with a space read undecoded stats as missing. */
   private def estimatedSplits(df: DataFrame, files: Array[String],
                               maxPartitionBytes: Long): Option[Long] = {
     val hconf = df.sparkSession.sessionState.newHadoopConf()
     val sizes = files.map { uri =>
       val len =
-        if (uri.startsWith("file:") || !uri.contains(":"))
-          new java.io.File(uri.stripPrefix("file:")).length
-        else
-          try {
-            val p = new org.apache.hadoop.fs.Path(uri)
-            p.getFileSystem(hconf).getFileStatus(p).getLen
-          } catch { case _: Exception => 0L }
+        try {
+          val p = new org.apache.hadoop.fs.Path(new java.net.URI(uri))
+          p.getFileSystem(hconf).getFileStatus(p).getLen
+        } catch { case _: Exception => 0L }
       if (len > 0L) Some(len) else None
     }
     if (sizes.exists(_.isEmpty)) None

@@ -85,7 +85,7 @@ final class SyncEngine(val store: TableStore) {
         store.overwrite(t, incoming)
         SyncResult(t, SyncOp.AppendWhere, 0L, store.count(t))
       case Some(target) =>
-        val before = target.count()
+        val before = store.count(t)
         // NULL-safe keep: rows where pred is false OR NULL are kept, exactly
         // like SQL DELETE WHERE pred (deletes only pred=TRUE rows).
         val kept = target.filter(!coalesce(pred, lit(false)))
@@ -128,7 +128,7 @@ final class SyncEngine(val store: TableStore) {
         store.overwrite(t, incoming)
         SyncResult(t, SyncOp.AppendNotIn, 0L, store.count(t))
       case Some(target) =>
-        val before = target.count()
+        val before = store.count(t)
         val fresh  = incoming.join(
           Watermark.keySet(target, keys), keys, "left_anti")
         store.append(t, fresh)
@@ -164,7 +164,7 @@ final class SyncEngine(val store: TableStore) {
     require(pkColumns.nonEmpty, s"$t: update requires a primary key")
     val target = targetOpt(t).getOrElse(
       throw InvalidTableSpec(s"$t: update target does not exist"))
-    val before = target.count()
+    val before = store.count(t)
     val (feed, updCols) = updateFeed(spec, target, updatesSrc, pkColumns)
     val merged = mergeUpdates(target, target, feed, pkColumns, updCols,
       broadcastUpdates)
@@ -250,7 +250,7 @@ final class SyncEngine(val store: TableStore) {
     val t = spec.fullName
     val pstore = store.asInstanceOf[graft.io.ParquetTableStore]
     val target = store.read(t)
-    val before = target.count()
+    val before = store.count(t)
     // identical semantics to update(): W6 watermark + dictionary dedup +
     // matched-flag merge — only the rewrite scope differs
     val (feed, updCols) = updateFeed(spec, target, updatesSrc, pkColumns)
@@ -280,7 +280,7 @@ final class SyncEngine(val store: TableStore) {
       throw InvalidTableSpec("append_where requires where_filter")))
     val incoming = prepareSource(src, spec).filter(pred)
     val target = store.read(t)
-    val before = target.count()
+    val before = store.count(t)
     val affected = target.filter(coalesce(pred, lit(false))).select(partCol)
       .union(incoming.select(partCol)).distinct()
     val slice = target.join(broadcast(affected), Seq(partCol), "left_semi")

@@ -50,10 +50,6 @@ object Watermark {
                      row.getLong(1))
     }
 
-  /** Plain row count (`sum(1)` probes, A2). */
-  def countRows(target: Option[DataFrame]): Long =
-    target.map(_.count()).getOrElse(0L)
-
   /** Distinct key tuples of arity 1–3 — kept as a DataFrame, never
     * collected. */
   def keySet(target: DataFrame, keys: Seq[String]): DataFrame = {

@@ -24,7 +24,9 @@ import scala.util.{Failure, Success, Try}
   *    time; a second submission while state ≠ Wait is rejected.
   *  - **Progress heartbeat** (`:51-61,201-207`): a 5 s ticker per table
   *    writing copied-rows/speed audit events (interval configurable for
-  *    tests); interrupted at completion.
+  *    tests); interrupted at completion. Each tick reads the target's row
+  *    count from the store; on a [[graft.io.ParquetTableStore]] that is
+  *    footer metadata, so a tick launches no Spark job.
   *  - **Error capture** (`:118-129`): per-table failures audit an `error`
   *    event and fail the task, state returns to Wait.
   */
@@ -115,8 +117,9 @@ final class TaskRunner(
     val copied = new java.util.concurrent.atomic.AtomicLong(0)
     ticker.scheduleAtFixedRate(() => {
       // live progress = target row count while the copy runs — the
-      // reference's count-probe heartbeat (C4), racy by design; a count
-      // that fails mid-swap falls back to the last known value
+      // reference's count-probe heartbeat (C4), read from metadata where
+      // the store keeps it (parquet footers: no Spark job); racy by
+      // design, a count that fails mid-swap falls back to the last value
       val rows = Try(engine.store.count(spec.fullName)).getOrElse(copied.get())
       copied.set(rows)
       val secs = math.max(1L, (System.nanoTime() - t0) / 1000000000L)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.io.ParquetMeta
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -195,6 +196,20 @@ object EventStream {
       }
   }
 
+  /** A file stream over a parquet directory or single file, with the
+    * batch reader's schema (footer metadata: no Spark job). The
+    * file-stream source requires a DIRECTORY basePath; a single parquet
+    * file (pyarrow-written fixtures) streams from its parent with a glob
+    * pinned to the one file. */
+  private def parquetStream(spark: SparkSession, sourceDir: String,
+                            options: Map[String, String]): DataFrame = {
+    val f = new java.io.File(sourceDir)
+    val reader = spark.readStream
+      .schema(ParquetMeta.read(spark, sourceDir).schema).options(options)
+    if (f.isFile) reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
+    else reader.parquet(sourceDir)
+  }
+
   /** PRODUCTION sink shape: stream a parquet directory through a
     * stateless/append transform into a parquet SINK with a checkpoint —
     * nothing ever collects to the driver (the memory sink used by the
@@ -205,13 +220,7 @@ object EventStream {
                          outDir: String, checkpointDir: String,
                          transform: DataFrame => DataFrame,
                          options: Map[String, String] = Map.empty): Unit = {
-    val schema = spark.read.parquet(sourceDir).schema
-    val f = new java.io.File(sourceDir)
-    val reader = spark.readStream.schema(schema).options(options)
-    val stream =
-      if (f.isFile)
-        reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-      else reader.parquet(sourceDir)
+    val stream = parquetStream(spark, sourceDir, options)
     withStreamShufflePartitions(spark) {
       val q = transform(stream).writeStream
         .outputMode(OutputMode.Append())
@@ -233,13 +242,7 @@ object EventStream {
   def runStreamForeachBatch(spark: SparkSession, sourceDir: String,
                             perBatch: (DataFrame, Long) => Unit,
                             options: Map[String, String] = Map.empty): Unit = {
-    val schema = spark.read.parquet(sourceDir).schema
-    val f = new java.io.File(sourceDir)
-    val reader = spark.readStream.schema(schema).options(options)
-    val stream =
-      if (f.isFile)
-        reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-      else reader.parquet(sourceDir)
+    val stream = parquetStream(spark, sourceDir, options)
     withStreamShufflePartitions(spark) {
       val q = stream.writeStream
         .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -260,16 +263,7 @@ object EventStream {
                        mode: OutputMode = OutputMode.Complete(),
                        options: Map[String, String] = Map.empty): DataFrame = {
     spark.catalog.dropTempView(name)   // re-runs re-register the sink view
-    val schema = spark.read.parquet(sourceDir).schema
-    // the file-stream source requires a DIRECTORY basePath; a single
-    // parquet file (pyarrow-written fixtures) streams from its parent
-    // with a glob pinned to the one file
-    val f = new java.io.File(sourceDir)
-    val reader = spark.readStream.schema(schema).options(options)
-    val stream =
-      if (f.isFile)
-        reader.option("pathGlobFilter", f.getName).parquet(f.getParent)
-      else reader.parquet(sourceDir)
+    val stream = parquetStream(spark, sourceDir, options)
     withStreamShufflePartitions(spark) {
       val q = transform(stream).writeStream
         .outputMode(mode)

@@ -59,12 +59,6 @@ object OraTypeMap {
     StructField(name, dt, nullable)
   }
 
-  def toSparkSchema(cols: Seq[(String, String, Int, Boolean)],
-                    notNullColumns: Seq[String] = Nil): StructType =
-    StructType(cols.map { case (n, t, s, nul) =>
-      toSparkField(n, t, s, nul, notNullColumns)
-    })
-
   /** Schema inference from live JDBC metadata — the commented-but-
     * authoritative path of the reference
     * (`clickhouse/jdbsChSession.scala:526-539`: per-column

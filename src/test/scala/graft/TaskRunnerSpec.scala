@@ -95,6 +95,31 @@ class TaskRunnerSpec extends SparkTestBase {
     assert(audit.events.exists(_.status == "finished_update"))
   }
 
+  test("heartbeat on a ParquetTableStore launches no Spark job") {
+    // same task twice: a 50 ms heartbeat, and one that never ticks; the
+    // ticks read the existing target's row count from parquet footers
+    def jobsWith(heartbeat: FiniteDuration) = {
+      val store = new ParquetTableStore(spark, tmpDir("task-hb"))
+      val audit = new InMemoryAuditSink
+      val runner = new TaskRunner(spark, new SyncEngine(store), audit, heartbeat)
+      store.overwrite("db.hb", src(10))
+      val slowSrc: String => DataFrame = { _ => Thread.sleep(450); src(20) }
+      val (_, jobs) = JobProbe.jobs(spark) {
+        runner.run(TaskSpec(Seq(TableSpec(SyncOp.Recreate, "db", "hb"))), slowSrc)
+      }
+      assert(store.count("db.hb") == 20)
+      (audit.events.filter(_.status == "copying"), jobs)
+    }
+    val (ticks, withHeartbeat) = jobsWith(50.millis)
+    val (noTicks, without) = jobsWith(1.hour)
+    assert(ticks.size >= 2 && ticks.exists(_.rowsCopied == 10),
+      s"expected copying rows counting the 10-row target, got $ticks")
+    assert(noTicks.isEmpty)
+    assert(withHeartbeat.size == without.size,
+      s"heartbeat added jobs: [${withHeartbeat.mkString(" | ")}] vs " +
+        s"[${without.mkString(" | ")}]")
+  }
+
   test("heartbeat emits copying events for slow copies") {
     val (_, audit, runner) = fixture()
     val slowSrc: String => DataFrame = { _ => Thread.sleep(450); src(10) }
