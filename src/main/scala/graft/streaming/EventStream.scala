@@ -30,11 +30,15 @@ object EventStream {
     * sets it per stream volume; the local default min(cores, 8) keeps
     * fixture-scale state-store overhead bounded while leaving map-side
     * parallelism — which streaming scans take from the file layout, and
-    * per-batch heavy work takes from ScanFanout — untouched). */
-  private[graft] def streamShufflePartitions(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.stream.shufflePartitions")
-      .map(_.toInt)
-      .getOrElse(math.min(spark.sparkContext.defaultParallelism, 8))
+    * per-batch heavy work takes from ScanFanout — untouched). A value
+    * that is not a positive integer fails with the key and the value. */
+  private[graft] def streamShufflePartitions(spark: SparkSession): Int = {
+    val key = "spark.graft.stream.shufflePartitions"
+    spark.conf.getOption(key).map { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$v'"))
+    }.getOrElse(math.min(spark.sparkContext.defaultParallelism, 8))
+  }
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to the
     * streaming value, restoring the session value after. A streaming

@@ -196,6 +196,21 @@ class EventStreamSpec extends SparkTestBase {
     assert(got.count() >= 4)
   }
 
+  test("a bad stream partition setting names the key and the value") {
+    val key = "spark.graft.stream.shufflePartitions"
+    try {
+      for (bad <- Seq("abc", "0", "-2")) {
+        spark.conf.set(key, bad)
+        val e = intercept[IllegalArgumentException](
+          EventStream.streamShufflePartitions(spark))
+        assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"),
+          e.getMessage)
+      }
+      spark.conf.set(key, "3")
+      assert(EventStream.streamShufflePartitions(spark) == 3)
+    } finally spark.conf.unset(key)
+  }
+
   test("foreachBatch ingest: batch N's index admissions dedup batch N+1") {
     import org.apache.spark.sql.functions._
     val dir = tmpDir("stream") + "/ingest"
