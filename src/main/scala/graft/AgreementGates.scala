@@ -325,8 +325,18 @@ object AgreementGates {
         // localCheckpoint: the batch feeds the rule-langid pass AND the
         // trigram classify — pinned, the file is read and fanned once.
         val batch = graft.ops.ScanFanout.force(batch0).localCheckpoint()
-        val ba = batch.select(col("doc_id"),
-          graft.llm.TextAnalysis.langId(col("text")).as("pred_rule"))
+        // doc_id must key the batch: classifyByProfile answers once
+        // per INPUT row, so a repeated doc_id would join n×n below and
+        // inflate every count. One row per doc_id, or a named error.
+        val ba = batch.groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("__rows"),
+            max(graft.llm.TextAnalysis.langId(col("text"))).as("__rule"))
+          .select(col("doc_id"), when(col("__rows") > 1,
+              raise_error(concat(lit("GRAFT_DUPLICATE_DOC_ID: " +
+                "q365_stream_drift_monitor needs one row per doc_id in " +
+                "a micro-batch, doc_id "), col("doc_id").cast("string"),
+                lit(" has "), col("__rows").cast("string"), lit(" rows"))))
+            .otherwise(col("__rule")).as("pred_rule"))
         val bb = graft.llm.TextAnalysis.classifyByProfile(
             batch, "doc_id", "text", profiles, n = 3, topM = 100)
           .select(col("doc_id"), col("lang_pred").as("pred_trained"))
@@ -335,9 +345,10 @@ object AgreementGates {
         // the bucket min — each re-deriving rule/trained predictions over
         // the batch). classifyByProfile emits exactly one row per input
         // doc (left join + fallback) and both prediction columns are
-        // non-null by construction, so the inner join is a bijection onto
-        // the batch and every downstream statistic derives EXACTLY from
-        // this one (pred_rule, pred_trained) contingency:
+        // non-null by construction, so with doc_id a key (asserted in
+        // `ba`) the inner join is a bijection onto the batch and every
+        // downstream statistic derives EXACTLY from this one
+        // (pred_rule, pred_trained) contingency:
         //  - agreement: the same cells partitionAgreementPpm would build
         //  - drift marginals: n_a(la) = Σ_b nij(la, b)
         //  - bucket: min over cells of the per-cell min
@@ -389,19 +400,25 @@ object AgreementGates {
     val store = new graft.io.ParquetTableStore(s,
       java.nio.file.Files.createTempDirectory("q380mon").toString)
     graft.streaming.EventStream.runStreamForeachBatch(
-      s, tmp.getAbsolutePath, { (batch0, _) =>
-        // pinned: the batch feeds the band pass AND the bucket min —
-        // checkpointed, the micro-batch file is read once per trigger
-        val batch = batch0.localCheckpoint()
-        val banded = batch.select(
-          least(expr("length(text) div 200"), lit(4L)).as("band_len"),
-          least(expr("size(split(text, ' ')) div 40"), lit(4L))
-            .as("band_tok"))
-        val kappa = graft.ops.Agreement.weightedKappaPpm(
-          banded, "band_len", "band_tok")
-        val meta = batch.agg(
-          min(pmod(col("doc_id"), lit(4))).as("bucket"))
-        val row = meta.crossJoin(kappa)
+      s, tmp.getAbsolutePath, { (batch, _) =>
+        // ONE plan per micro-batch, nothing pinned: group the batch at
+        // (band_len, band_tok) cell grain, carrying each cell's bucket
+        // minimum, then fold the cells into (bucket, n, kappa_w_ppm) in
+        // one global aggregate. A NULL band keeps a cell of its own, so
+        // the bucket is still the minimum over every batch row while
+        // the kappa skips that cell.
+        val row = batch.select(
+            least(expr("length(text) div 200"), lit(4L)).as("__i"),
+            least(expr("size(split(text, ' ')) div 40"), lit(4L))
+              .as("__j"),
+            pmod(col("doc_id"), lit(4)).as("__bucket"))
+          .groupBy(col("__i"), col("__j"))
+          .agg(count(lit(1)).as("__nij"),
+            min(col("__bucket")).as("__bmin"))
+          .agg(min(col("__bmin")).as("bucket"),
+            graft.ops.Agreement.cellList(col("__i"), col("__j"),
+              col("__nij")).as("__cells"))
+          .transform(graft.ops.Agreement.weightedKappaOfCells(power = 1))
         if (store.exists("mon.kappa")) store.append("mon.kappa", row)
         else store.overwrite("mon.kappa", row)
       }, options = Map("maxFilesPerTrigger" -> "1"))

@@ -213,7 +213,7 @@ case class WinnowMins(child: Expression, window: Int) extends UnaryExpression {
   * This expression tokenizes once per row and emits all grams in one
   * fused pass; output is element-for-element identical to the lambda
   * form (spec-pinned), which is retained as
-  * `TextShingles.wordNgramsReference` for the parity spec.
+  * `KernelReferences.wordNgrams` in the test sources for the parity spec.
   */
 case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, s"n=$n must be >= 1")
@@ -257,7 +257,8 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
   * expression walks the boundaries once and emits every gram as a byte
   * slice; output is element-for-element identical to the lambda form
   * (spec-pinned), which is retained as
-  * `TextAnalysis.charNgramsReference` for the parity spec. */
+  * `KernelReferences.charNgrams` in the test sources for the parity
+  * spec. */
 case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, s"n=$n must be >= 1")
 

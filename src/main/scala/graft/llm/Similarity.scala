@@ -27,19 +27,11 @@ object Similarity {
 
   /** Exact decimal sum of elementwise double products — native fused
     * kernel (graft.functions.DecimalDotProduct), bit-identical to
-    * [[dotDecimalReference]] (spec-pinned): the lambda chain was
-    * CodegenFallback and dominated q26/q34 wall time. */
+    * the lambda-chain reference `KernelReferences.dotDecimal` in the
+    * test sources (spec-pinned): the lambda chain was CodegenFallback
+    * and dominated q26/q34 wall time. */
   def dotDecimal(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.vecDotDecimal(a, b)
-
-  /** Reference lambda form of [[dotDecimal]] (CodegenFallback — kept only
-    * as the independent oracle for the kernel-equivalence spec). */
-  private[graft] def dotDecimalReference(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) =>
-        (x.cast("double") * y.cast("double")).cast("decimal(38,15)")),
-      lit(0).cast("decimal(38,15)"),
-      (acc, x) => (acc + x).cast("decimal(38,15)"))
 
   def norm2Decimal(v: Column): Column = dotDecimal(v, v)
 
@@ -368,16 +360,11 @@ object Similarity {
 
   /** Hamming distance between two equal-length sign sketches:
     * Σ popcount(a_i XOR b_i) — the native fused kernel
-    * (graft.functions.HammingDistance, whole-stage codegen). */
+    * (graft.functions.HammingDistance, whole-stage codegen). Parity
+    * with the lambda reference `KernelReferences.hammingDistance` (test
+    * sources) is spec-pinned. */
   def hammingDistance(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.vecHamming(a, b)
-
-  /** Reference lambda form of [[hammingDistance]] — parity-spec oracle
-    * only: higher-order lambdas are CodegenFallback and run interpreted
-    * per candidate pair. */
-  private[graft] def hammingDistanceReference(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => bit_count(x.bitwiseXOR(y))),
-      lit(0), (acc, d) => acc + d)
 
   /** Hamming top-k of `candidates` for each row of `queries` over sign
     * sketches. Same broadcast-queries shape as [[bruteForceTopK]], but
@@ -610,33 +597,15 @@ object Similarity {
         col("m.dist2").as("dist2"))
   }
 
-  /** B pseudo-random hyperplane components for dimension d, derived from
-    * xxhash64(seed, plane, dim) → ±1. Deterministic, no driver-side RNG
-    * state, evaluated inside codegen. */
-  private def planeComponent(plane: Int, dim: Column, seed: Int): Column =
-    when(pmod(xxhash64(lit(seed), lit(plane), dim), lit(2)) === 0, lit(1.0))
-      .otherwise(lit(-1.0))
-
-  /** B-bit sign signature of a vector under the deterministic hyperplanes.
-    * Native fused-loop codegen kernel (graft.functions.LshSignature) —
-    * this runs over the FULL corpus on every LSH pass, so it must not be
-    * a CodegenFallback lambda chain. Bit-identical to
-    * [[lshSignatureReference]] (spec-pinned). */
+  /** B-bit sign signature of a vector under deterministic hyperplanes:
+    * the component for (plane, dim) is xxhash64(seed, plane, dim) → ±1,
+    * so there is no driver-side RNG state. Native fused-loop codegen
+    * kernel (graft.functions.LshSignature) — this runs over the FULL
+    * corpus on every LSH pass, so it must not be a CodegenFallback
+    * lambda chain. Bit-identical to the lambda reference
+    * `KernelReferences.lshSignature` in the test sources (spec-pinned). */
   def lshSignature(vec: Column, bits: Int, seed: Int = 42): Column =
     graft.functions.VectorFunctions.vecLshSignature(vec, bits, seed)
-
-  /** Reference lambda form of [[lshSignature]] (CodegenFallback — kept
-    * only as the independent oracle for the kernel-equivalence spec). */
-  private[graft] def lshSignatureReference(vec: Column, bits: Int, seed: Int = 42): Column = {
-    val bitCols = (0 until bits).map { p =>
-      val dot = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(p, i, seed)),
-        lit(0.0), (acc, x) => acc + x)
-      when(dot >= 0, lit(1L) * lit(1L << p)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
-  }
 
   /** The md5-parity hyperplane component for (plane p, dim d): ±1 by
     * the parity of the first 15 md5 hex digits of "lsh:p:d" — the same
@@ -669,25 +638,14 @@ object Similarity {
     * Double.toString/BigDecimal — the measured q363/q341 hot spot —
     * and carried bits × dims literal nodes into every codegen
     * fragment). Bit-identical by construction and spec-pinned against
-    * [[lshSignatureMd5Reference]]; production uses the fused xxhash64
+    * the old column tree, kept as `KernelReferences.lshSignatureMd5` in
+    * the test sources; production uses the fused xxhash64
     * [[lshSignature]] kernel — the gate variant shares its banding
     * math and recall behavior by construction. */
   def lshSignatureMd5(vec: Column, bits: Int, dims: Int): Column = {
     require(bits >= 1 && bits <= 63, s"bits=$bits out of [1, 63]")
     require(dims >= 1, s"dims must be >= 1, got $dims")
     graft.functions.VectorFunctions.vecLshSignatureMd5(vec, bits, dims)
-  }
-
-  /** Pre-round-12 column-tree form of [[lshSignatureMd5]] — kept as the
-    * independent semantics oracle for the fused kernel's parity spec. */
-  private[graft] def lshSignatureMd5Reference(vec: Column, bits: Int,
-                                              dims: Int): Column = {
-    val bitCols = (0 until bits).map { p =>
-      val plane = array(
-        (0 until dims).map(d => lit(md5PlaneComponent(p, d))): _*)
-      when(dotDecimal(vec, plane) >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bitCols.reduce(_ + _)
   }
 
   /** (band, key) structs for a vector, choosing the signature layout by

@@ -385,23 +385,12 @@ object TextAnalysis {
     * (functions.CharNgrams) — one boundary walk per document — replaces
     * the interpreted `transform` lambda, whose per-element `substr`
     * re-scanned the string from its start (O(chars²) per doc,
-    * CodegenFallback). Element-for-element identical to the retained
-    * [[charNgramsReference]] (parity spec in TextExtractSpec). */
+    * CodegenFallback). Element-for-element identical to that lambda
+    * form, kept as `KernelReferences.charNgrams` in the test sources
+    * (parity spec in TextExtractSpec). */
   def charNgrams(text: Column, n: Int): Column = {
     require(n >= 1, s"n must be >= 1, got $n")
     graft.functions.TextFunctions.charNgrams(text, n)
-  }
-
-  /** Reference lambda form of [[charNgrams]] (parity-spec oracle only;
-    * quadratic in interpreted evaluation — the `sequence(1, 0)` guard
-    * exists because Spark's sequence counts DOWN instead of returning
-    * empty). */
-  private[graft] def charNgramsReference(text: Column, n: Int): Column = {
-    require(n >= 1, s"n must be >= 1, got $n")
-    when(length(text) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(1), length(text) - lit(n - 1)),
-        i => text.substr(i, lit(n))))
   }
 
   /** Train per-language character-n-gram profiles from a labeled corpus:

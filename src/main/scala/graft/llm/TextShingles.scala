@@ -16,23 +16,13 @@ object TextShingles {
 
   /** Word n-grams joined by single spaces — native fused expression
     * (graft.functions.WordNgrams): one tokenize per row, all grams in
-    * one pass. The combinator form below is kept only as the oracle for
-    * the parity spec: its transform lambda is CodegenFallback AND the
-    * interpreter re-evaluates the split(text) subtree per emitted gram,
-    * so shingling a document costs O(tokens²) characters. */
+    * one pass. The combinator form is kept only as the oracle for the
+    * parity spec (`KernelReferences.wordNgrams` in the test sources):
+    * its transform lambda is CodegenFallback AND the interpreter
+    * re-evaluates the split(text) subtree per emitted gram, so
+    * shingling a document costs O(tokens²) characters. */
   def wordNgrams(text: Column, n: Int): Column =
     graft.functions.TextFunctions.wordNgrams(text, n)
-
-  /** Reference lambda form of [[wordNgrams]] (see above — parity spec
-    * oracle only; quadratic in interpreted evaluation). */
-  private[graft] def wordNgramsReference(text: Column, n: Int): Column = {
-    require(n >= 1)
-    val ws = words(text)
-    val cnt = size(ws)
-    when(cnt < n, array().cast("array<string>")).otherwise(
-      transform(sequence(lit(0), cnt - lit(n)), i =>
-        concat_ws(" ", (0 until n).map(k => element_at(ws, i + lit(k + 1))): _*)))
-  }
 
   /** Character n-grams (classic MinHash shingles). */
   def charNgrams(text: Column, n: Int): Column = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -266,6 +266,44 @@ object Agreement {
           .as("w_ppm"))
   }
 
+  /** Largest alphabet product K_a·K_b that [[weightedKappaPpm]] and
+    * [[gkLambdaPpm]] accept. Both fold their contingency cells into ONE
+    * array in ONE row, and each marginal scans that array once per
+    * category, so the final step costs O((K_a+K_b)·K_a·K_b) lambda
+    * steps on a single task: 4096 cells (a 64×64 alphabet) keep it
+    * under a million. A larger alphabet fails the query with a
+    * `GRAFT_CONTINGENCY_ALPHABET` error rather than run that step on
+    * one core. Bucket the categories upstream. */
+  val MaxContingencyCells: Long = 4096L
+
+  /** Aggregate: the (i, j, n) contingency cells as one array of
+    * structs. A cell with a NULL key drops out. */
+  private[graft] def cellList(i: Column, j: Column, n: Column): Column =
+    collect_list(when(i.isNotNull && j.isNotNull,
+      struct(i.as("i"), j.as("j"), n.as("n"))))
+
+  /** The cell list, or a `GRAFT_CONTINGENCY_ALPHABET` error when K_a·K_b
+    * exceeds [[MaxContingencyCells]]. */
+  private def boundedCells(cells: Column, op: String): Column = {
+    def k(side: String) =
+      size(array_distinct(transform(cells, _(side)))).cast("long")
+    when(k("i") * k("j") > MaxContingencyCells, raise_error(concat(
+        lit(s"GRAFT_CONTINGENCY_ALPHABET: $op takes K_a*K_b <= " +
+          s"$MaxContingencyCells, got K_a="), k("i").cast("string"),
+        lit(", K_b="), k("j").cast("string"))))
+      .otherwise(cells)
+  }
+
+  /** One struct per distinct key k of a cell list's `side` ("i" or
+    * "j"): the marginal total m and the largest cell count top. */
+  private def margins(cells: Column, side: String): Column =
+    transform(array_distinct(transform(cells, _(side))), k => {
+      val line = filter(cells, _(side) === k)
+      struct(k.as("k"),
+        aggregate(line, lit(0L), (a, c) => a + c("n")).as("m"),
+        array_max(transform(line, _("n"))).as("top"))
+    })
+
   /** COCHRAN'S Q — "do these k binary classifiers/treatments have the
     * same success rate on the SAME items?": the k-treatment
     * generalization of McNemar (ops/Stats.mcnemarMilli), the gate
@@ -300,42 +338,60 @@ object Agreement {
     * Both divided quantities non-negative (the subtraction carries
     * the sign exactly, the chiSquare stance), NULL when the expected
     * weighted disagreement is 0 (both raters' marginals sit on one
-    * identical category). Categories are LONG ordinal codes by
-    * contract (bucket upstream; the alphabet, not the rows, is what
-    * crosses the marginal product).
+    * identical category, or no rated pair at all). Categories are
+    * LONG ordinal codes, and the alphabet must stay bounded:
+    * K_a·K_b ≤ [[MaxContingencyCells]], enforced in the plan.
     *
     * Output one row: (n, kappa_w_ppm).
     *
-    * Scale shape: one (i,j) contingency groupBy; the expected term is
-    * a marginal×marginal product over the CATEGORY alphabet (k² rows,
-    * bounded by contract), one final row. */
+    * Scale shape: one (i,j) contingency groupBy — rows shuffle once, at
+    * cell grain — then ONE global aggregate collects the ≤ K_a·K_b
+    * cells into a single row, where Catalyst higher-order functions
+    * derive n, the observed term, both marginals and the expected
+    * term (the K_a×K_b marginal product). Nothing is pinned: the input
+    * is read once by one plan. */
   def weightedKappaPpm(df: DataFrame, aCol: String, bCol: String,
-                       power: Int = 1): DataFrame = {
-    require(power == 1 || power == 2,
-      s"power must be 1 (linear) or 2 (quadratic), got $power")
-    def wt(i: org.apache.spark.sql.Column, j: org.apache.spark.sql.Column) =
-      if (power == 1) abs(i - j).cast(d38)
-      else (i - j).cast(d38) * (i - j)
-    val cells = df.select(col(aCol).cast("long").as("__i"),
+                       power: Int = 1): DataFrame =
+    df.select(col(aCol).cast("long").as("__i"),
         col(bCol).cast("long").as("__j"))
       .where(col("__i").isNotNull && col("__j").isNotNull)
       .groupBy(col("__i"), col("__j")).agg(count(lit(1)).as("__nij"))
-      .localCheckpoint() // consumed by the observed pass and both marginals
-    val obs = cells.agg(sum(col("__nij")).as("__n"),
-      sum(wt(col("__i"), col("__j")) * col("__nij")).as("__wo"))
-    val margA = cells.groupBy(col("__i")).agg(sum(col("__nij")).as("__r"))
-    val margB = cells.groupBy(col("__j")).agg(sum(col("__nij")).as("__c"))
-    val exp = margA.crossJoin(margB)
-      .agg(sum(wt(col("__i"), col("__j")) *
-        col("__r") * col("__c")).as("__we"))
-    obs.crossJoin(broadcast(exp))
-      .select(coalesce(col("__n"), lit(0L)).cast("long").as("n"),
-        when(col("__we").isNull || col("__we") === 0,
-            lit(null).cast("long"))
+      .agg(cellList(col("__i"), col("__j"), col("__nij")).as("__cells"))
+      .transform(weightedKappaOfCells(power))
+
+  /** [[weightedKappaPpm]] over a one-row frame whose `__cells` column is
+    * a [[cellList]] of LONG codes. Every other column passes through,
+    * ahead of (n, kappa_w_ppm): a caller that groups its rows at cell
+    * grain anyway can carry its own per-cell aggregates into the same
+    * global aggregate (q380 carries the micro-batch bucket). */
+  private[graft] def weightedKappaOfCells(power: Int)(
+      row: DataFrame): DataFrame = {
+    require(power == 1 || power == 2,
+      s"power must be 1 (linear) or 2 (quadratic), got $power")
+    def wt(i: Column, j: Column) =
+      if (power == 1) abs(i - j).cast(d38)
+      else (i - j).cast(d38) * (i - j)
+    val keep = row.columns.toSeq.filter(_ != "__cells").map(col)
+    val cells = col("__cells")
+    val zero = lit(0).cast(d38)
+    row.select(keep :+
+        boundedCells(cells, "weightedKappaPpm").as("__cells"): _*)
+      .select(keep ++ Seq(cells, margins(cells, "i").as("__ra"),
+        margins(cells, "j").as("__cb")): _*)
+      .select(keep ++ Seq(
+        aggregate(cells, lit(0L), (a, c) => a + c("n")).as("__n"),
+        aggregate(cells, zero,
+          (a, c) => a + wt(c("i"), c("j")) * c("n")).as("__wo"),
+        aggregate(col("__ra"), zero, (a, r) => a +
+          aggregate(col("__cb"), zero,
+            (b, c) => b + wt(r("k"), c("k")) * r("m") * c("m")))
+          .as("__we")): _*)
+      .select(keep ++ Seq(col("__n").as("n"),
+        when(col("__we") === 0, lit(null).cast("long"))
           .otherwise(expr(
             """1000000 - CAST((1000000 * CAST(__n AS DECIMAL(38,0)) * __wo)
               |div __we AS BIGINT)""".stripMargin.replace("\n", " ")))
-          .as("kappa_w_ppm"))
+          .as("kappa_w_ppm")): _*)
   }
 
   /** PARTITION AGREEMENT (ARI + Fowlkes–Mallows) — "did the clustering
@@ -359,7 +415,13 @@ object Agreement {
     * Output one row: (n, k_a, k_b, ari_ppm, fm2_ppm).
     *
     * Scale shape: one (a,b) contingency groupBy — cells shuffle, rows
-    * don't — then two marginal-grain aggregates and one final row. */
+    * don't — then two marginal-grain aggregates and one final row.
+    * The cells are pinned (one local checkpoint) because three passes
+    * read them. They are NOT folded into one row the way
+    * [[weightedKappaPpm]] folds its cells: both sides are cluster ids,
+    * whose alphabet has no bound (a shattering clustering has one
+    * cluster per item), so the cell table can be as large as the
+    * input and must stay a distributed frame. */
   def partitionAgreementPpm(df: DataFrame, aCol: String,
                             bCol: String): DataFrame = {
     val cells = df.select(col(aCol).cast("string").as("__a"),
@@ -423,31 +485,35 @@ object Agreement {
     * reduction and is exactly replayable with two integer divisions:
     *   λ_B|A·10⁶ = (10⁶·(Σ_i max_j n_ij − max_j C_j)) div (n − max_j C_j)
     * (numerator ≥ 0 since row maxima dominate the column-total max).
-    * NULL when the predicted variable is constant (n = max marginal).
+    * NULL when the predicted variable is constant (n = max marginal)
+    * or the input has no complete pair. The alphabet must stay
+    * bounded: K_a·K_b ≤ [[MaxContingencyCells]], enforced in the plan.
     *
     * Output one row: (n, lambda_ab_ppm = predict B from A,
     * lambda_ba_ppm = predict A from B).
     *
-    * Scale shape: one contingency groupBy, two marginal-grain
-    * aggregates, one final row — rows shuffle once at cell grain. */
+    * Scale shape: one contingency groupBy — rows shuffle once, at cell
+    * grain — then ONE global aggregate collects the cells into a
+    * single row, where higher-order functions take the row maxima,
+    * column maxima and both marginals. Nothing is pinned. */
   def gkLambdaPpm(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.select(col(aCol).cast("string").as("__a"),
+    val cells = col("__cells")
+    df.select(col(aCol).cast("string").as("__a"),
         col(bCol).cast("string").as("__b"))
       .where(col("__a").isNotNull && col("__b").isNotNull)
       .groupBy(col("__a"), col("__b")).agg(count(lit(1)).as("__nij"))
-      .localCheckpoint() // consumed four times (two maxima, two marginals)
-    val rowMax = cells.groupBy(col("__a")).agg(max(col("__nij")).as("__m"))
-      .agg(sum(col("__m")).as("__rowmax"))
-    val colMax = cells.groupBy(col("__b")).agg(max(col("__nij")).as("__m"))
-      .agg(sum(col("__m")).as("__colmax"))
-    val margA = cells.groupBy(col("__a")).agg(sum(col("__nij")).as("__m"))
-      .agg(max(col("__m")).as("__maxa"))
-    val margB = cells.groupBy(col("__b")).agg(sum(col("__nij")).as("__m"))
-      .agg(max(col("__m")).as("__maxb"))
-    val n = cells.agg(sum(col("__nij")).as("__n"))
-    n.crossJoin(broadcast(rowMax)).crossJoin(broadcast(colMax))
-      .crossJoin(broadcast(margA)).crossJoin(broadcast(margB))
-      .select(coalesce(col("__n"), lit(0L)).cast("long").as("n"),
+      .agg(cellList(col("__a"), col("__b"), col("__nij")).as("__cells"))
+      .select(boundedCells(cells, "gkLambdaPpm").as("__cells"))
+      .select(aggregate(cells, lit(0L), (a, c) => a + c("n")).as("__n"),
+        margins(cells, "i").as("__ra"), margins(cells, "j").as("__cb"))
+      .select(col("__n"),
+        aggregate(col("__ra"), lit(0L), (a, r) => a + r("top"))
+          .as("__rowmax"),
+        aggregate(col("__cb"), lit(0L), (a, c) => a + c("top"))
+          .as("__colmax"),
+        array_max(transform(col("__ra"), _("m"))).as("__maxa"),
+        array_max(transform(col("__cb"), _("m"))).as("__maxb"))
+      .select(col("__n").as("n"),
         when(col("__n") === col("__maxb"), lit(null).cast("long"))
           .otherwise(expr(
             "(1000000 * (__rowmax - __maxb)) div (__n - __maxb)"))
@@ -897,7 +963,9 @@ object Agreement {
     *
     * Scale shape: identical to [[partitionAgreementPpm]] — one (a,b)
     * contingency groupBy (cells shuffle, rows don't), two
-    * marginal-grain aggregates, one final row. */
+    * marginal-grain aggregates, one final row, over pinned cells.
+    * Cluster ids have no bounded alphabet, so the cells stay a
+    * distributed frame rather than one collected row. */
   def pairCountingPpm(df: DataFrame, aCol: String,
                       bCol: String): DataFrame = {
     val cells = df.select(col(aCol).cast("string").as("__a"),
@@ -971,7 +1039,10 @@ object Agreement {
     *
     * Scale shape: one (a,b) contingency groupBy, then two
     * marginal-grain aggregates (max + Σn² ride the same pass) and one
-    * final row — identical to the rest of the partition family. */
+    * final row — identical to the rest of the partition family,
+    * pinned cells included: the cluster side has no bounded alphabet,
+    * so the cells stay a distributed frame rather than one collected
+    * row. */
   def bcubedPpm(df: DataFrame, clusterCol: String,
                 labelCol: String): DataFrame = {
     val cells = df.select(col(clusterCol).cast("string").as("__a"),

@@ -405,6 +405,81 @@ class AgreementSpec extends SparkTestBase {
     assert(r3 == ((3L, Some(1000000L), Some(1000000L))), s"got $r3")
   }
 
+  // ------------------------------- single-aggregate contingency kernels
+  /** Random (a, b) rating pairs: K_a, K_b ∈ [1, 5] codes starting
+    * anywhere in [−3, 2], 0-40 rows, some NULL on either side. */
+  private def randomPairs(rnd: scala.util.Random): Seq[(Option[Long], Option[Long])] = {
+    val (ka, kb) = (1 + rnd.nextInt(5), 1 + rnd.nextInt(5))
+    val (a0, b0) = (rnd.nextInt(6) - 3L, rnd.nextInt(6) - 3L)
+    def code(k: Int, base: Long) =
+      if (rnd.nextInt(10) == 0) None else Some(base + rnd.nextInt(k))
+    Seq.fill(rnd.nextInt(41))((code(ka, a0), code(kb, b0)))
+  }
+
+  /** The messages of an exception and all its causes, one string. */
+  private def causeMessages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+
+  test("weightedKappaPpm equals the multi-pass reference on random " +
+       "tables: negative codes, one category, empty input, power 2") {
+    val rnd = new scala.util.Random(380)
+    val fixed = Seq(
+      Seq.empty[(Option[Long], Option[Long])],            // empty input
+      Seq((None, Some(1L)), (Some(2L), None)),            // no full pair
+      Seq.fill(3)((Some(-2L), Some(-2L))),                // one category
+      Seq((Some(-5L), Some(3L)), (Some(3L), Some(-5L)))) // wide reversal
+    (fixed ++ Seq.fill(14)(randomPairs(rnd))).zipWithIndex.foreach {
+      case (pairs, t) =>
+        val df = pairs.toDF("a", "b")
+        Seq(1, 2).foreach { p =>
+          val got = Agreement.weightedKappaPpm(df, "a", "b", p)
+            .as[(Long, Option[Long])].collect().toSeq
+          val want = AgreementReference.weightedKappaPpm(df, "a", "b", p)
+            .as[(Long, Option[Long])].collect().toSeq
+          assert(got == want, s"table $t power $p: $pairs")
+        }
+    }
+  }
+
+  test("gkLambdaPpm equals the multi-pass reference on random tables: " +
+       "one category, empty input") {
+    val rnd = new scala.util.Random(353)
+    val fixed = Seq(
+      Seq.empty[(Option[Long], Option[Long])],
+      Seq.fill(4)((Some(0L), Some(0L))),
+      Seq((Some(1L), Some(7L)), (Some(2L), Some(7L)), (Some(2L), None)))
+    (fixed ++ Seq.fill(14)(randomPairs(rnd))).zipWithIndex.foreach {
+      case (pairs, t) =>
+        val df = pairs.map { case (a, b) =>
+          (a.map(x => s"a$x"), b.map(x => s"b$x")) }.toDF("a", "b")
+        val got = Agreement.gkLambdaPpm(df, "a", "b")
+          .as[(Long, Option[Long], Option[Long])].collect().toSeq
+        val want = AgreementReference.gkLambdaPpm(df, "a", "b")
+          .as[(Long, Option[Long], Option[Long])].collect().toSeq
+        assert(got == want, s"table $t: $pairs")
+    }
+  }
+
+  test("weightedKappaPpm and gkLambdaPpm reject an alphabet product " +
+       "above MaxContingencyCells with a named error") {
+    // 65 × 65 = 4225 > 4096 cells; 64 × 64 = 4096 is still accepted
+    def square(k: Int) = spark.range(k.toLong * k)
+      .selectExpr(s"id div $k AS a", s"id % $k AS b")
+    assert(Agreement.MaxContingencyCells == 4096L)
+    val kappa = causeMessages(intercept[Exception](
+      Agreement.weightedKappaPpm(square(65), "a", "b").collect()))
+    assert(kappa.contains("GRAFT_CONTINGENCY_ALPHABET") &&
+      kappa.contains("K_a=65, K_b=65"), kappa)
+    val lambda = causeMessages(intercept[Exception](
+      Agreement.gkLambdaPpm(square(65), "a", "b").collect()))
+    assert(lambda.contains("GRAFT_CONTINGENCY_ALPHABET"), lambda)
+    assert(Agreement.weightedKappaPpm(square(64), "a", "b")
+      .as[(Long, Option[Long])].collect().head._1 == 4096L)
+    assert(Agreement.gkLambdaPpm(square(64), "a", "b")
+      .as[(Long, Option[Long], Option[Long])].collect().head._1 == 4096L)
+  }
+
   test("linkPredictionPpm plan: wedge join keys on the hub, never a cartesian") {
     val e = spark.range(2, 2000).selectExpr("id AS s", "id / 2 AS d")
     val p = GraphOps.linkPredictionPpm(e, "s", "d")
@@ -570,6 +645,44 @@ class AgreementSpec extends SparkTestBase {
           s"(the baseline is frozen), saw $postStream — " +
           s"[${pre.drop(firstStream).filter(isCollect).mkString(" | ")}]")
     } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("q380 runs at most 3 Spark jobs per micro-batch") {
+    // one cell-grain shuffle, one global-aggregate shuffle, one write;
+    // the batch is not pinned and the kappa reads no pinned cells
+    val (_, jobs) = JobProbe.describedJobs(spark) {
+      SparkEntry.queries("q380_stream_kappa_canary")(
+        spark, sf("sf0.001")).collect()
+    }
+    val perBatch = jobs.flatMap { case (_, d) =>
+      "(?m)^batch = (\\d+)$".r.findFirstMatchIn(d).map(_.group(1)) }
+      .groupBy(identity).map { case (b, js) => b -> js.size }
+    assert(perBatch.size == 4, s"expected 4 micro-batches: $perBatch " +
+      s"[${jobs.map(_._2.replace('\n', ' ')).mkString(" | ")}]")
+    assert(perBatch.values.forall(_ <= 3),
+      s"jobs per micro-batch: $perBatch")
+  }
+
+  test("q353, q356, q361 and q380 leave no persistent RDD behind") {
+    Seq("q353_gk_lambda", "q356_weighted_kappa", "q361_quadratic_kappa",
+        "q380_stream_kappa_canary").foreach { q =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      SparkEntry.queries(q)(spark, sf("sf0.001")).collect()
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$q left persistent RDDs $left")
+    }
+  }
+
+  test("q365 rejects a repeated doc_id with a named error") {
+    // two rows under one doc_id would join 2×2 against the trained
+    // classifier's per-row answer and inflate the drift counts
+    val dir = tmpDir("q365dup")
+    val docs = spark.read.parquet(s"${sf("sf0.001")}/documents.parquet")
+    docs.unionByName(docs.where("doc_id % 50 = 7"))
+      .write.parquet(s"$dir/documents.parquet")
+    val msgs = causeMessages(intercept[Exception](
+      SparkEntry.queries("q365_stream_drift_monitor")(spark, dir).collect()))
+    assert(msgs.contains("GRAFT_DUPLICATE_DOC_ID"), msgs)
   }
 
   // -------------------------------------------------------- ICC(2,1)

@@ -19,13 +19,27 @@ object JobProbe {
 
   /** The block's result and the stage names of each job it launched. */
   def jobs[T](spark: SparkSession)(block: => T): (T, Seq[String]) = {
+    val (out, described) = describedJobs(spark)(block)
+    (out, described.map(_._1))
+  }
+
+  /** Like [[jobs]], each job's stage names paired with its
+    * `spark.job.description` ("" when unset). A streaming micro-batch
+    * describes its jobs with a line `batch = <id>`. */
+  def describedJobs[T](spark: SparkSession)(
+      block: => T): (T, Seq[(String, String)]) = {
     val sc = spark.sparkContext
     val token = java.util.UUID.randomUUID().toString
-    val seen = new CopyOnWriteArrayList[(String, Boolean)]()
+    val seen = new CopyOnWriteArrayList[((String, String), Boolean)]()
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val sentinel = Option(j.properties).exists(_.getProperty(Tag) == token)
-        seen.add((j.stageInfos.map(_.name).mkString("; "), sentinel)); ()
+        val props = Option(j.properties)
+        val sentinel = props.exists(_.getProperty(Tag) == token)
+        val description = props
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")
+        seen.add(((j.stageInfos.map(_.name).mkString("; "), description),
+          sentinel)); ()
       }
     }
     sc.addSparkListener(listener)

@@ -1168,9 +1168,9 @@ class LlmOpsSpec extends SparkTestBase {
     // independent recomputation through the CodegenFallback lambda chain
     val ref = df.crossJoin(cents)
       .select($"vec_id", $"cid",
-        (Similarity.dotDecimalReference($"embedding", $"embedding").cast("double")
-          + Similarity.dotDecimalReference($"cvec", $"cvec").cast("double")
-          - lit(2.0) * Similarity.dotDecimalReference($"embedding", $"cvec").cast("double"))
+        (KernelReferences.dotDecimal($"embedding", $"embedding").cast("double")
+          + KernelReferences.dotDecimal($"cvec", $"cvec").cast("double")
+          - lit(2.0) * KernelReferences.dotDecimal($"embedding", $"cvec").cast("double"))
           .as("dist2"))
       .groupBy($"vec_id")
       .agg(min(struct($"dist2", $"cid")).as("m"))

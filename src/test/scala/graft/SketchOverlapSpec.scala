@@ -62,7 +62,7 @@ class SketchOverlapSpec extends SparkTestBase {
     val joined = sk.as("a").join(sk.as("b"), $"a.vec_id" < $"b.vec_id")
     val diff = joined.select(
         Similarity.hammingDistance($"a.s", $"b.s").as("native"),
-        Similarity.hammingDistanceReference($"a.s", $"b.s").as("ref"))
+        KernelReferences.hammingDistance($"a.s", $"b.s").as("ref"))
       .where($"native" =!= $"ref").count()
     assert(diff == 0)
   }

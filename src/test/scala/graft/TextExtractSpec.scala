@@ -69,7 +69,7 @@ class TextExtractSpec extends SparkTestBase {
       val got = df.select(TextAnalysis.charNgrams(col("t"), n).as("g"))
         .as[Seq[String]].collect().toSeq
       val ref = df.select(
-          TextAnalysis.charNgramsReference(col("t"), n).as("g"))
+          KernelReferences.charNgrams(col("t"), n).as("g"))
         .as[Seq[String]].collect().toSeq
       assert(got == ref, s"fused charNgrams diverged from reference at n=$n")
     }

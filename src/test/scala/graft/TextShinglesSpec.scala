@@ -18,7 +18,7 @@ class TextShinglesSpec extends SparkTestBase {
     for (df <- Seq(edge, real); n <- Seq(1, 2, 3)) {
       val mism = df.select(
           TextShingles.wordNgrams($"text", n).as("native"),
-          TextShingles.wordNgramsReference($"text", n).as("ref"))
+          KernelReferences.wordNgrams($"text", n).as("ref"))
         .filter($"native" =!= $"ref").count()
       assert(mism == 0, s"n=$n")
     }

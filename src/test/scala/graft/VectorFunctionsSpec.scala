@@ -64,7 +64,7 @@ class VectorFunctionsSpec extends SparkTestBase {
     for (bits <- Seq(8, 16); seed <- Seq(42, 7)) {
       val mismatches = emb.select(
           vecLshSignature($"embedding", bits, seed).as("native"),
-          graft.llm.Similarity.lshSignatureReference($"embedding", bits, seed).as("ref"))
+          KernelReferences.lshSignature($"embedding", bits, seed).as("ref"))
         .filter($"native" =!= $"ref").count()
       assert(mismatches == 0, s"bits=$bits seed=$seed: $mismatches mismatches")
     }
@@ -98,15 +98,12 @@ class VectorFunctionsSpec extends SparkTestBase {
   }
 
   test("128-bit band keys are bit-identical to the per-plane lambda reference") {
-    def planeComponent(plane: Int, dim: org.apache.spark.sql.Column, seed: Int): org.apache.spark.sql.Column =
-      when(pmod(xxhash64(lit(seed), lit(plane), dim), lit(2)) === 0, lit(1.0))
-        .otherwise(lit(-1.0))
     def refBandKey(vec: org.apache.spark.sql.Column, b: Int, width: Int, seed: Int): org.apache.spark.sql.Column =
       (0 until width).map { j =>
         val p = b * width + j
         val dot = aggregate(
           zip_with(vec, sequence(lit(0), size(vec) - 1),
-            (x, i) => x.cast("double") * planeComponent(p, i, seed)),
+            (x, i) => x.cast("double") * KernelReferences.planeComponent(p, i, seed)),
           lit(0.0), (acc, x) => acc + x)
         when(dot >= 0, lit(1L) * lit(1L << j)).otherwise(lit(0L))
       }.reduce(_ + _)
@@ -147,7 +144,7 @@ class VectorFunctionsSpec extends SparkTestBase {
     // compare the DECIMAL(38,15) values themselves, not a rounded double
     val mismatches = pairs.select(
         vecDotDecimal(col("x.embedding"), col("y.embedding")).as("native"),
-        graft.llm.Similarity.dotDecimalReference(
+        KernelReferences.dotDecimal(
           col("x.embedding"), col("y.embedding")).as("ref"))
       .filter($"native" =!= $"ref" ||
               $"native".cast("string") =!= $"ref".cast("string"))
@@ -159,9 +156,9 @@ class VectorFunctionsSpec extends SparkTestBase {
         (vecDotDecimal(col("x.embedding"), col("y.embedding")).cast("double") /
           sqrt(vecDotDecimal(col("x.embedding"), col("x.embedding")).cast("double") *
                vecDotDecimal(col("y.embedding"), col("y.embedding")).cast("double"))).as("k"),
-        (graft.llm.Similarity.dotDecimalReference(col("x.embedding"), col("y.embedding")).cast("double") /
-          sqrt(graft.llm.Similarity.dotDecimalReference(col("x.embedding"), col("x.embedding")).cast("double") *
-               graft.llm.Similarity.dotDecimalReference(col("y.embedding"), col("y.embedding")).cast("double"))).as("r"))
+        (KernelReferences.dotDecimal(col("x.embedding"), col("y.embedding")).cast("double") /
+          sqrt(KernelReferences.dotDecimal(col("x.embedding"), col("x.embedding")).cast("double") *
+               KernelReferences.dotDecimal(col("y.embedding"), col("y.embedding")).cast("double"))).as("r"))
       .filter($"k" =!= $"r").count()
     assert(n2 == 0)
   }
@@ -179,7 +176,7 @@ class VectorFunctionsSpec extends SparkTestBase {
     val df2 = rows.toDF("id", "a", "b")
     val bad = df2.select(
         vecDotDecimal($"a", $"b").as("native"),
-        graft.llm.Similarity.dotDecimalReference($"a", $"b").as("ref"))
+        KernelReferences.dotDecimal($"a", $"b").as("ref"))
       .filter($"native" =!= $"ref" ||
               $"native".cast("string") =!= $"ref".cast("string"))
       .count()
@@ -194,7 +191,7 @@ class VectorFunctionsSpec extends SparkTestBase {
       .toDF("id", "a", "b")
     val got = df3.select($"id",
         vecDotDecimal($"a", $"b").cast("string").as("native"),
-        graft.llm.Similarity.dotDecimalReference($"a", $"b").cast("string").as("ref"))
+        KernelReferences.dotDecimal($"a", $"b").cast("string").as("ref"))
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(got(1L)._1 == null && got(1L)._2 == null)
     assert(got(2L)._1 == null && got(2L)._2 == null)
@@ -211,7 +208,7 @@ class VectorFunctionsSpec extends SparkTestBase {
       big.select(vecDotDecimal($"v", $"v")).collect()
     }
     intercept[Exception] {
-      big.select(graft.llm.Similarity.dotDecimalReference($"v", $"v")).collect()
+      big.select(KernelReferences.dotDecimal($"v", $"v")).collect()
     }
   }
 
@@ -247,7 +244,7 @@ class VectorFunctionsSpec extends SparkTestBase {
     val d = rows.toDF("id", "a", "b")
     val bad = d.select(
         vecDotDecimal($"a", $"b").as("native"),
-        graft.llm.Similarity.dotDecimalReference($"a", $"b").as("ref"))
+        KernelReferences.dotDecimal($"a", $"b").as("ref"))
       .filter($"native".cast("string") =!= $"ref".cast("string"))
       .count()
     assert(bad == 0)
@@ -274,7 +271,7 @@ class VectorFunctionsSpec extends SparkTestBase {
       val bad = emb.unionByName(extra).select(
           graft.llm.Similarity.lshSignatureMd5($"v", bits, dims = 64)
             .as("fused"),
-          graft.llm.Similarity.lshSignatureMd5Reference($"v", bits, dims = 64)
+          KernelReferences.lshSignatureMd5($"v", bits, dims = 64)
             .as("ref"))
         .filter($"fused".isNull || $"fused" =!= $"ref").count()
       assert(bad == 0, s"fused md5 signature diverges at bits=$bits")
