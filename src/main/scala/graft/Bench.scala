@@ -1,8 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.util.{Failure, Success, Try}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric","value","unit","queries","sf"}.
+  * Usage: `runMain graft.Bench [name,name,...]`; with a name list it
+  * runs only those queries, prints {"metric":"subset",...} with full
+  * names and 3-decimal seconds, and writes no out file.
   *
   * Measurement protocol (round-2 verdict: a single pass is too noisy to
   * adjudicate — unchanged queries swung 5–10× run-to-run on a busy VM;
@@ -85,20 +90,39 @@ object Bench {
       s""""nfail":${failed.size},"failed":$failedJson,"qorder":"numeric-asc",""" +
       s""""qds":"$qs","sf":"$sf"}"""
   }
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    val spark = GraftSession.builder(cpus.toInt, "graft-bench").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm-up: session init, codegen compiler, parquet footer reads
+  /** The settings every harness main reads from the environment. */
+  final case class Env(sfDir: String, cpus: Int, reps: Int)
+
+  /** Reads SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS and
+    * SPARK_GRAFT_BENCH_REPS. A count that is not a positive integer
+    * fails with the variable and the value. */
+  def env(vars: Map[String, String] = sys.env): Env = {
+    def count(key: String, default: Int): Int = vars.get(key).map { v =>
+      v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive integer, got '$v'"))
+    }.getOrElse(default)
+    Env(vars.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"),
+      count("SPARK_GRAFT_CPUS", 4), count("SPARK_GRAFT_BENCH_REPS", 3))
+  }
+
+  /** A local session on `cpus` cores after a warm-up action (session
+    * init, codegen compiler, parquet footer reads). */
+  def session(cpus: Int, sfDir: String, appName: String): SparkSession = {
+    val spark = GraftSession.local(cpus, appName)
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-    // pass-major order: every query once per pass, min across passes
-    val timesByQuery = scala.collection.mutable.LinkedHashMap(
-      names.map { case (n, _) => n -> Vector.empty[Double] }: _*)
-    for (_ <- 1 to reps; (name, fn) <- names) {
+    spark
+  }
+
+  /** Runs every query once per pass, `reps` passes in pass-major order,
+    * and returns each query's per-pass results, in `queries` order.
+    * `measure` gets the query's builder; a query that throws is a
+    * failed entry for that pass, never a fake result (a regression must
+    * read as breakage, not as a faster run), and the loop goes on. */
+  def passes[R](spark: SparkSession, sfDir: String,
+                queries: Seq[(String, (SparkSession, String) => DataFrame)],
+                reps: Int)(measure: (() => DataFrame) => R): Seq[(String, Seq[Try[R]])] = {
+    val runs = queries.map(_ => Vector.newBuilder[Try[R]])
+    for (_ <- 1 to reps; ((name, fn), out) <- queries.zip(runs)) {
       // each rep must pay the full query: operators that persist() their
       // result would otherwise be cache-substituted in reps 2+ (identical
       // canonicalized plans) and the reported minimum would time a cache
@@ -108,31 +132,51 @@ object Bench {
       // operator-internal persist()/localCheckpoint() (iterative graph
       // ops, index builds) outlive their query and accumulated across the
       // 200+-query run until the block manager ran hot — BENCH_r07
-      // recorded q100 at 7.9 s where an isolated BenchOne min is 1.5 s.
+      // recorded q100 at 7.9 s where an isolated min is 1.5 s.
       // Dropping every persistent RDD between queries (blocking, so the
       // release is not racing the next timed region) restores per-query
       // isolation without a session restart.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      val t0 = System.nanoTime()
-      // a failed query reports -1.0, never a fake timing — a regression
-      // must read as breakage, not as a faster run
-      val t =
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+      out += (try Success(measure(() => fn(spark, sfDir)))
         catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); -1.0 }
-      timesByQuery(name) = timesByQuery(name) :+ t
+          System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); Failure(e) })
     }
-    def round3(v: Double): Double = math.rint(v * 1000) / 1000
-    val results = timesByQuery.toSeq.map { case (name, ts) =>
-      name -> (if (ts.exists(_ < 0)) -1L else math.rint(ts.min * 10).toLong)
+    queries.map(_._1).zip(runs.map(_.result()))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val env = Bench.env()
+    val subset = args.headOption.map(_.split(',').toSeq)
+    val queries = subset.fold(SparkEntry.queries.toSeq.sortBy(_._1))(
+      _.map(n => n -> SparkEntry.queries(n)))
+    val spark = session(env.cpus, env.sfDir, "graft-bench")
+    val mins = passes(spark, env.sfDir, queries, env.reps) { query =>
+      val t0 = System.nanoTime()
+      query().count()
+      (System.nanoTime() - t0) / 1e9
+    }.map { case (name, ts) =>
+      name -> (if (ts.exists(_.isFailure)) -1.0 else ts.map(_.get).min)
     }
-    val total = round3(results.map(_._2).filter(_ >= 0).sum / 10.0)
-    val json = serialize(results, total, sfDir, reps)
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] $outPath write failed: ${e.getMessage}") }
     spark.stop()
-    println(json)
+    def round3(v: Double): Double = math.rint(v * 1000) / 1000
+    if (subset.isDefined) {
+      val secs = mins.map { case (n, t) => n -> (if (t < 0) -1.0 else round3(t)) }
+      val total = round3(secs.map(_._2).filter(_ >= 0).sum)
+      val qs = secs.map { case (n, v) => s""""$n":$v""" }.mkString(",")
+      val sf = new java.io.File(env.sfDir).getName
+      println(s"""{"metric":"subset","value":$total,"unit":"sec","reps":${env.reps},""" +
+        s""""queries":{$qs},"sf":"$sf"}""")
+    } else {
+      val results = mins.map { case (n, t) =>
+        n -> (if (t < 0) -1L else math.rint(t * 10).toLong) }
+      val total = round3(results.map(_._2).filter(_ >= 0).sum / 10.0)
+      val json = serialize(results, total, env.sfDir, env.reps)
+      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $outPath write failed: ${e.getMessage}") }
+      println(json)
+    }
   }
 }

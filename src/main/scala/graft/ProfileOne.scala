@@ -1,105 +1,49 @@
 package graft
 
-import scala.collection.mutable
+import scala.util.{Failure, Success}
 
 /** Per-JOB wall-clock profile of one or more SparkEntry queries — the
   * measurement tool behind OPTIMIZATION_r12.md (guide §1: decide where
-  * the time goes before touching the plan). For each named query it
-  * runs the full gate (construction + terminal count, the Bench
-  * methodology) under a job-start/end listener and prints every Spark
-  * job's duration, description, and summed stage shuffle metrics, then
-  * the query wall total. Construction-time jobs (collects, fixture
-  * writes, stream micro-batches) are exactly what Bench times, so they
-  * are profiled too — that is the point.
+  * the time goes before touching the plan). Each query runs in full
+  * (construction + terminal count, the Bench methodology) under
+  * [[JobProbe]], then every Spark job's duration, description, and
+  * summed stage records are printed with the query wall total.
+  * Construction-time jobs (collects, fixture writes, stream
+  * micro-batches) are exactly what Bench times, so they are profiled
+  * too — that is the point. Passes after the first show the
+  * post-codegen steady state; each pass prints separately.
   *
-  * Usage: `runMain graft.ProfileOne <name[,name...]> [reps]` with
-  * SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in Bench (rep 2+ exist to
-  * see the post-codegen steady state; each rep prints separately). */
+  * Usage: `runMain graft.ProfileOne <name[,name...]>`, settings as in
+  * [[Bench.env]]. */
 object ProfileOne {
-  private final case class JobRow(id: Int, ms: Long, desc: String,
-                                  shufWriteRec: Long, shufReadRec: Long,
-                                  inRec: Long, tasks: Int,
-                                  stages: String = "")
-
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(',').toSeq
-    val reps = if (args.length > 1) args(1).toInt else 1
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(cpus.toInt, "graft-profile").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-
-    import org.apache.spark.scheduler._
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    val rows = mutable.ArrayBuffer.empty[JobRow]
-    val stageAgg = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, Long, Int)]()
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val stageNames = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .map(_.getProperty("spark.job.description")).filter(_ != null)
-          .getOrElse("")
-        jobStart.put(e.jobId, (e.time, desc))
-        e.stageIds.foreach(sid => stageToJob.put(sid, e.jobId))
-      }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        val jid = stageToJob.getOrDefault(e.stageInfo.stageId, -1)
-        stageNames.merge(jid, e.stageInfo.name.take(70),
-          (a: String, b: String) => a + " | " + b)
-        if (m != null) {
-          stageAgg.merge(jid,
-            (m.shuffleWriteMetrics.recordsWritten,
-             m.shuffleReadMetrics.recordsRead,
-             m.inputMetrics.recordsRead, e.stageInfo.numTasks),
-            (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 + b._4))
-        }
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = {
-        Option(jobStart.remove(e.jobId)).foreach { case (t0, desc) =>
-          val (sw, sr, in, nt) =
-            Option(stageAgg.remove(e.jobId)).getOrElse((0L, 0L, 0L, 0))
-          val sn = Option(stageNames.remove(e.jobId)).getOrElse("")
-          rows.synchronized {
-            rows += JobRow(e.jobId, e.time - t0, desc, sw, sr, in, nt, sn)
-          }
-        }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val env = Bench.env()
+    val queries = args(0).split(',').toSeq.map(n => n -> SparkEntry.queries(n))
+    val spark = Bench.session(env.cpus, env.sfDir, "graft-profile")
     try {
-      for (name <- names; rep <- 1 to reps) {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
-        rows.synchronized(rows.clear())
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(name)(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        // drain the async listener bus so late job-end events land
-        var spins = 0
-        var prev = -1
-        var cur = rows.synchronized(rows.size)
-        while (prev != cur && spins < 50) {
-          Thread.sleep(100); prev = cur
-          cur = rows.synchronized(rows.size); spins += 1
-        }
-        val snap = rows.synchronized(rows.toVector)
-        val jobSum = snap.map(_.ms).sum / 1e3
-        println(f"%n[profile] ===== $name rep$rep: wall=$wall%.3f s, " +
-          f"jobs=${snap.size}, job-sum=$jobSum%.3f s ($n rows) =====")
-        snap.sortBy(-_.ms).take(40).foreach { r =>
-          val d = if (r.desc.length > 60) r.desc.take(60) + "…" else r.desc
-          println(f"[profile]  job${r.id}%4d ${r.ms / 1e3}%8.3f s  " +
-            f"tasks=${r.tasks}%4d in=${r.inRec}%9d sw=${r.shufWriteRec}%8d " +
-            f"sr=${r.shufReadRec}%8d  $d [${r.stages.take(140)}]")
+      val runs = Bench.passes(spark, env.sfDir, queries, env.reps) { query =>
+        JobProbe.jobs(spark) {
+          val t0 = System.nanoTime()
+          val n = query().count()
+          (n, (System.nanoTime() - t0) / 1e9)
         }
       }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.stop()
-    }
+      for ((name, reps) <- runs; (run, i) <- reps.zipWithIndex) run match {
+        case Failure(e) =>
+          println(s"\n[profile] ===== $name rep${i + 1}: FAILED: ${e.getMessage}")
+        case Success(((n, wall), jobs)) =>
+          val jobSum = jobs.map(_.ms).filter(_ >= 0).sum / 1e3
+          println(f"%n[profile] ===== $name rep${i + 1}: wall=$wall%.3f s, " +
+            f"jobs=${jobs.size}, job-sum=$jobSum%.3f s ($n rows) =====")
+          jobs.sortBy(-_.ms).take(40).foreach { j =>
+            val d = if (j.description.length > 60) j.description.take(60) + "…"
+              else j.description
+            println(f"[profile]  job${j.id}%4d ${j.ms / 1e3}%8.3f s  " +
+              f"tasks=${j.tasks}%4d in=${j.inputRecords}%9d " +
+              f"sw=${j.shuffleWriteRecords}%8d sr=${j.shuffleReadRecords}%8d  " +
+              f"$d [${j.stages.take(140)}]")
+          }
+      }
+    } finally spark.stop()
   }
 }

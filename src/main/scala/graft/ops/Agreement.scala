@@ -304,24 +304,6 @@ object Agreement {
         array_max(transform(line, _("n"))).as("top"))
     })
 
-  /** COCHRAN'S Q — "do these k binary classifiers/treatments have the
-    * same success rate on the SAME items?": the k-treatment
-    * generalization of McNemar (ops/Stats.mcnemarMilli), the gate
-    * before pairwise post-hocs when comparing k rule variants on one
-    * eval set. Input is WIDE — one row per item, one boolean column
-    * per treatment (the mcnemar calling convention).
-    *
-    * Exact integer form with C_j = per-treatment success totals,
-    * T = Σ C_j, R_i = per-item success count:
-    *   q_milli = (1000·(k−1)·(k·Σ_j C_j² − T²)) div (k·T − Σ_i R_i²)
-    * The numerator is ≥ 0 (power-mean inequality), so no sign lane.
-    * NULL when the denominator is 0 — every item all-success or
-    * all-failure (no within-item variation, the test undefined).
-    *
-    * Output one row: (n_items, k, q_milli).
-    *
-    * Scale shape: R_i is computed row-wise map-side; one single-row
-    * aggregate carries Σ R_i² and each C_j — rows never shuffle. */
   /** WEIGHTED COHEN'S KAPPA (linear weights) — two-rater agreement for
     * ORDINAL categories, where plain kappa (ops/Stats.cohenKappaPpm)
     * treats "one bucket off" and "five buckets off" as equally wrong:
@@ -573,6 +555,24 @@ object Agreement {
           .as("na_ppm"))
   }
 
+  /** COCHRAN'S Q — "do these k binary classifiers/treatments have the
+    * same success rate on the SAME items?": the k-treatment
+    * generalization of McNemar (ops/Stats.mcnemarMilli), the gate
+    * before pairwise post-hocs when comparing k rule variants on one
+    * eval set. Input is WIDE — one row per item, one boolean column
+    * per treatment (the mcnemar calling convention).
+    *
+    * Exact integer form with C_j = per-treatment success totals,
+    * T = Σ C_j, R_i = per-item success count:
+    *   q_milli = (1000·(k−1)·(k·Σ_j C_j² − T²)) div (k·T − Σ_i R_i²)
+    * The numerator is ≥ 0 (power-mean inequality), so no sign lane.
+    * NULL when the denominator is 0 — every item all-success or
+    * all-failure (no within-item variation, the test undefined).
+    *
+    * Output one row: (n_items, k, q_milli).
+    *
+    * Scale shape: R_i is computed row-wise map-side; one single-row
+    * aggregate carries Σ R_i² and each C_j — rows never shuffle. */
   def cochranQMilli(df: DataFrame, treatmentCols: Seq[String]): DataFrame = {
     val k = treatmentCols.size
     require(k >= 2, s"need >= 2 treatments, got $k")
@@ -804,26 +804,6 @@ object Agreement {
           .as("alpha_ppm"))
   }
 
-  /** KRIPPENDORFF'S ALPHA (interval) — [[krippendorffAlphaPpm]] for
-    * CONTINUOUS ratings: the squared-difference metric replaces the
-    * 0/1 nominal one, so "off by 2 cents" and "off by 2000 cents"
-    * stop counting the same. Same unequal-raters coincidence form,
-    * same unpairable-item drop.
-    *
-    * Exact pinned-floor form over pairable items (values integer by
-    * contract; n = Σ n_u kept ratings, S/T pooled Σx²/Σx over kept):
-    *   per-item Σ_{j≠k}(x_j−x_k)² = 2·(n_u·S_u − T_u²)   [pure integer]
-    *   do_micro = Σ_u (10⁶ · 2·(n_u·S_u − T_u²)) div (n_u − 1)
-    *              [per-ITEM floor, then summed — the nominal schedule;
-    *              each term must fit BIGINT: fine for values ≤ ~10⁶
-    *              and ≤ ~100 raters per item]
-    *   alpha_ppm = 10⁶ − (do_micro · (n−1)) div (2·(n·S − T²))
-    * NULL when n = 0 or n·S = T² (all pooled values identical).
-    *
-    * Output one row: (n_values, n_unpairable, alpha_ppm).
-    *
-    * Scale shape: identical to the nominal form — one item-grain
-    * groupBy, one pooled aggregate, one final row. */
   /** BLAND–ALTMAN AGREEMENT READOUT — the method-comparison companion
     * to [[cccPpm]]: CCC gives one number, Bland–Altman asks the
     * clinical questions — what is the systematic BIAS between the two
@@ -882,6 +862,26 @@ object Agreement {
           .as("within2sd_ppm"))
   }
 
+  /** KRIPPENDORFF'S ALPHA (interval) — [[krippendorffAlphaPpm]] for
+    * CONTINUOUS ratings: the squared-difference metric replaces the
+    * 0/1 nominal one, so "off by 2 cents" and "off by 2000 cents"
+    * stop counting the same. Same unequal-raters coincidence form,
+    * same unpairable-item drop.
+    *
+    * Exact pinned-floor form over pairable items (values integer by
+    * contract; n = Σ n_u kept ratings, S/T pooled Σx²/Σx over kept):
+    *   per-item Σ_{j≠k}(x_j−x_k)² = 2·(n_u·S_u − T_u²)   [pure integer]
+    *   do_micro = Σ_u (10⁶ · 2·(n_u·S_u − T_u²)) div (n_u − 1)
+    *              [per-ITEM floor, then summed — the nominal schedule;
+    *              each term must fit BIGINT: fine for values ≤ ~10⁶
+    *              and ≤ ~100 raters per item]
+    *   alpha_ppm = 10⁶ − (do_micro · (n−1)) div (2·(n·S − T²))
+    * NULL when n = 0 or n·S = T² (all pooled values identical).
+    *
+    * Output one row: (n_values, n_unpairable, alpha_ppm).
+    *
+    * Scale shape: identical to the nominal form — one item-grain
+    * groupBy, one pooled aggregate, one final row. */
   def krippendorffAlphaIntervalPpm(df: DataFrame, itemCol: String,
                                    valueCol: String): DataFrame = {
     val base = df.select(col(itemCol).as("__i"),

@@ -590,75 +590,55 @@ class AgreementSpec extends SparkTestBase {
     // counts and collects them ONCE — so across the whole gate there
     // must be exactly one `collect at AgreementGates` job (the
     // LazyBuilderSpec listener pattern, applied to run-time jobs).
-    val sites =
-      new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // AQE stage submission can lose the action call site in stage
-        // names; the job-level property keeps it
-        val prop = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-          .getOrElse("")
-        sites.add(prop + " ;; " + j.stageInfos.map(_.name).mkString("; "))
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = SparkEntry.queries("q365_stream_drift_monitor")(
+    val (out, jobs) = JobProbe.jobs(spark) {
+      SparkEntry.queries("q365_stream_drift_monitor")(
         spark, sf("sf0.001")).collect()
-      assert(out.length == 4, s"expected 4 micro-batch rows, got " +
-        s"${out.length}")
-      // async FIFO listener bus: sentinel job, then wait for it
-      spark.sparkContext.parallelize(1 to 4, 1).count()
-      val deadline = System.nanoTime() + 15L * 1000 * 1000 * 1000
-      def all() = sites.toArray.map(_.toString).toSeq
-      while (!all().exists(_.contains("count at AgreementSpec")) &&
-          System.nanoTime() < deadline)
-        Thread.sleep(50)
-      val pre = all().takeWhile(!_.contains("count at AgreementSpec"))
-      // the baseline collect is an AQE action: its call site is lost
-      // (withThreadLocalCaptured), so pin it structurally — the ONLY
-      // driver-collect jobs in the whole gate are the frozen
-      // baseline's (1 collect = 1-4 AQE sub-jobs), and they ALL land
-      // BEFORE the first micro-batch job. A reintroduced per-batch
-      // recompute would surface as collect/AQE jobs after the stream
-      // starts (or as 4x the pre-stream count).
-      def isCollect(s2: String) =
-        s2.contains("withThreadLocalCaptured") ||
-          s2.contains("collect at AgreementGates")
-      val firstStream = pre.indexWhere(_.contains("start at EventStream"))
-      assert(firstStream >= 0, "stream never started")
-      val preStream = pre.take(firstStream).count(isCollect)
-      val postStream = pre.drop(firstStream).count(isCollect)
-      // upper bound raised 4 → 5 in round 12: the scan-fanout exchange
-      // on the baseline's langid pass adds one AQE shuffle sub-job; the
-      // guard's teeth are unchanged (a per-batch recompute shows as
-      // post-stream collects, or ~4x this count)
-      assert(preStream >= 1 && preStream <= 5,
-        s"frozen baseline must cost exactly ONE pre-stream collect " +
-          s"(1-5 AQE sub-jobs), saw $preStream — " +
-          s"[${pre.take(firstStream).mkString(" | ")}]")
-      assert(postStream == 0,
-        s"NO collect/AQE-driver job may run once the stream starts " +
-          s"(the baseline is frozen), saw $postStream — " +
-          s"[${pre.drop(firstStream).filter(isCollect).mkString(" | ")}]")
-    } finally spark.sparkContext.removeSparkListener(l)
+    }
+    assert(out.length == 4, s"expected 4 micro-batch rows, got " +
+      s"${out.length}")
+    // AQE stage submission can lose the action call site in stage
+    // names; the job-level property keeps it
+    val pre = jobs.map(j => j.callSite + " ;; " + j.stages)
+    // the baseline collect is an AQE action: its call site is lost
+    // (withThreadLocalCaptured), so pin it structurally — the ONLY
+    // driver-collect jobs in the whole gate are the frozen
+    // baseline's (1 collect = 1-4 AQE sub-jobs), and they ALL land
+    // BEFORE the first micro-batch job. A reintroduced per-batch
+    // recompute would surface as collect/AQE jobs after the stream
+    // starts (or as 4x the pre-stream count).
+    def isCollect(s2: String) =
+      s2.contains("withThreadLocalCaptured") ||
+        s2.contains("collect at AgreementGates")
+    val firstStream = pre.indexWhere(_.contains("start at EventStream"))
+    assert(firstStream >= 0, "stream never started")
+    val preStream = pre.take(firstStream).count(isCollect)
+    val postStream = pre.drop(firstStream).count(isCollect)
+    // upper bound raised 4 → 5 in round 12: the scan-fanout exchange
+    // on the baseline's langid pass adds one AQE shuffle sub-job; the
+    // guard's teeth are unchanged (a per-batch recompute shows as
+    // post-stream collects, or ~4x this count)
+    assert(preStream >= 1 && preStream <= 5,
+      s"frozen baseline must cost exactly ONE pre-stream collect " +
+        s"(1-5 AQE sub-jobs), saw $preStream — " +
+        s"[${pre.take(firstStream).mkString(" | ")}]")
+    assert(postStream == 0,
+      s"NO collect/AQE-driver job may run once the stream starts " +
+        s"(the baseline is frozen), saw $postStream — " +
+        s"[${pre.drop(firstStream).filter(isCollect).mkString(" | ")}]")
   }
 
   test("q380 runs at most 3 Spark jobs per micro-batch") {
     // one cell-grain shuffle, one global-aggregate shuffle, one write;
     // the batch is not pinned and the kappa reads no pinned cells
-    val (_, jobs) = JobProbe.describedJobs(spark) {
+    val (_, jobs) = JobProbe.jobs(spark) {
       SparkEntry.queries("q380_stream_kappa_canary")(
         spark, sf("sf0.001")).collect()
     }
-    val perBatch = jobs.flatMap { case (_, d) =>
-      "(?m)^batch = (\\d+)$".r.findFirstMatchIn(d).map(_.group(1)) }
+    val perBatch = jobs.flatMap { j =>
+      "(?m)^batch = (\\d+)$".r.findFirstMatchIn(j.description).map(_.group(1)) }
       .groupBy(identity).map { case (b, js) => b -> js.size }
     assert(perBatch.size == 4, s"expected 4 micro-batches: $perBatch " +
-      s"[${jobs.map(_._2.replace('\n', ' ')).mkString(" | ")}]")
+      s"[${jobs.map(_.description.replace('\n', ' ')).mkString(" | ")}]")
     assert(perBatch.values.forall(_ <= 3),
       s"jobs per micro-batch: $perBatch")
   }

@@ -141,29 +141,9 @@ class BpeSpec extends SparkTestBase {
     val wf = Bpe.wordFrequencies(docs, "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     wf.count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
     def countJobs(body: => Seq[(String, String)]): (Seq[(String, String)], Int) = {
-      spark.sparkContext.addSparkListener(listener)
-      jobs.set(0)
-      try {
-        val r = body
-        // the listener bus is async: poll until the count is stable
-        var last = -1
-        var stable = 0
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        while (stable < 3 && System.nanoTime() < deadline) {
-          val now = jobs.get()
-          if (now == last) stable += 1 else { stable = 0; last = now }
-          Thread.sleep(100)
-        }
-        (r, jobs.get())
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (r, jobs) = JobProbe.jobs(spark)(body)
+      (r, jobs.size)
     }
     val (seq1, jobs1) = countJobs(Bpe.learnMerges(wf, 20, batchSize = 1))
     val (seqN, jobsN) = countJobs(Bpe.learnMerges(wf, 20, batchSize = 16))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-
 /** Shuffle-BUDGET regression guard (round-9 verdict ask #5): bench
   * wall-time swings 0.7–1.1× with ambient VM load, so the stable
   * scale signal is the plan's shuffle VOLUME, not its seconds. For the
@@ -18,7 +16,7 @@ import org.apache.spark.sql.DataFrame
   * (removing one broadcast) multiplies its shuffle records several-fold.
   */
 class ShuffleBudgetSpec extends SparkTestBase {
-  import ShuffleBudget.shuffledRecords
+  import ShuffleAudit.shuffledRecords
 
   /** (gate, records budget at sf0.01). Measured 2026-08 (round 10):
     * actual records in comment; budget ≈ actual × 1.5 rounded up. */
@@ -118,32 +116,5 @@ class ShuffleBudgetSpec extends SparkTestBase {
         s"$name shuffled only $recs records vs measured $actual — " +
           "re-pin the budget to keep the guard binding")
     }
-  }
-}
-
-/** Shared metric extraction + a measuring main:
-  * `sbt "Test/runMain graft.ShuffleBudget <gate,gate,...>"` prints the
-  * actuals to pin in [[ShuffleBudgetSpec]]. */
-object ShuffleBudget {
-
-  /** Delegates to [[graft.ShuffleAudit.shuffledRecords]] — the metric
-    * moved to main sources in round 12 so the SCALE rehearsal probes
-    * budgets at sf1 from the same code path (verdict ask #8). */
-  def shuffledRecords(spark: org.apache.spark.sql.SparkSession,
-                      build: => DataFrame): Long =
-    graft.ShuffleAudit.shuffledRecords(spark, build)
-
-  def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(4, "shuffle-budget-measure")
-    val names = args(0).split(',').toSeq
-    names.foreach { n =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      val recs = shuffledRecords(spark,
-        SparkEntry.queries(n)(spark, "/root/testdata/sf0.01"))
-      println(s"[shuffle-budget] $n records=$recs")
-    }
-    spark.stop()
   }
 }

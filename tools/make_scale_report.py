@@ -28,7 +28,7 @@ asserted from one artifact.
 
 The optional overrides file maps query name -> true sf1 deciseconds for
 entries the Bench serializer CLAMPED at 999 ds (its line-width contract)
-— re-measure those with graft.BenchOne and record the honest number;
+— re-measure those with graft.Bench <gates> and record the honest number;
 overridden entries carry "sf1_source": "benchone".
 """
 import json, sys
@@ -112,11 +112,11 @@ def main(b01_path, b1_path, oracle_path, out_path, ov_path=None,
             if b != 999:
                 print(f"WARNING: override for {name} but its bench "
                       f"value is {b}, not the 999 clamp — overriding "
-                      "anyway (BenchOne re-measure takes precedence)",
+                      "anyway (the re-measure takes precedence)",
                       file=sys.stderr)
             b, src = int(overrides[name]), "benchone"
         elif b == 999:
-            src = "CLAMPED-999 (re-measure with BenchOne)"
+            src = "CLAMPED-999 (re-measure with graft.Bench <gate>)"
         denom = max(a, 3)  # 0.3 s noise floor on the small-SF side
         norm = round(b / (10.0 * denom), 2)
         cls = ("superlinear" if norm > 1.25 else
