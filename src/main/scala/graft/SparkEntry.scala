@@ -19,7 +19,7 @@ object SparkEntry {
         "lineitem", "events", "documents", "embeddings").foreach { name =>
       val p = s"$dir/$name.parquet"
       if (new java.io.File(p).exists())
-        spark.read.parquet(p).createOrReplaceTempView(name)
+        graft.io.ParquetMeta.read(spark, p).createOrReplaceTempView(name)
     }
 
   /** Stored-query text in the reference's dialect: `{name:Type}`

@@ -57,11 +57,16 @@ final class ParquetTableStore(val spark: SparkSession, root: String)
     * materializes before the old data is touched, so `overwrite(t, f(read(t)))`
     * is safe (parquet self-overwrite otherwise corrupts: the lazy plan would
     * scan files that the write is deleting). */
-  override def overwrite(table: String, df: DataFrame): Unit = {
+  override def overwrite(table: String, df: DataFrame): Unit =
+    stagedSwap(table)(df.write.mode(SaveMode.Overwrite).parquet(_))
+
+  /** Write `table`'s new contents to a sibling staging dir with
+    * `write`, then swap it in for the old dir. */
+  private def stagedSwap(table: String)(write: String => Unit): Unit = {
     val target  = dir(table)
     val staging = new Path(root,
       s".staging-${table.replace('.', '_')}-${System.nanoTime()}")
-    df.write.mode(SaveMode.Overwrite).parquet(staging.toString)
+    write(staging.toString)
     val f = fs
     if (f.exists(target)) f.delete(target, true)
     f.mkdirs(target.getParent)
@@ -75,18 +80,9 @@ final class ParquetTableStore(val spark: SparkSession, root: String)
   /** Initial load of a hive-partitioned table (one subdir per value of
     * `partCols`). Partitioning is the unit of selective rewrite below. */
   def overwritePartitioned(table: String, df: DataFrame,
-                           partCols: Seq[String]): Unit = {
-    val target  = dir(table)
-    val staging = new Path(root,
-      s".staging-${table.replace('.', '_')}-${System.nanoTime()}")
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partCols: _*).parquet(staging.toString)
-    val f = fs
-    if (f.exists(target)) f.delete(target, true)
-    f.mkdirs(target.getParent)
-    if (!f.rename(staging, target))
-      throw new RuntimeException(s"swap failed for $table")
-  }
+                           partCols: Seq[String]): Unit =
+    stagedSwap(table)(df.write.mode(SaveMode.Overwrite)
+      .partitionBy(partCols: _*).parquet(_))
 
   /** Replace ONLY the partitions present in `df`, leaving every other
     * partition's files untouched — Spark's dynamic partition overwrite

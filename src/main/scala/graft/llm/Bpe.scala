@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.ops.Pins
 
 /** Byte-pair-encoding merge learning — the subword-tokenizer trainer of
   * an LLM data pipeline (the vocabulary every later token-count /
@@ -92,14 +93,6 @@ object Bpe {
     // once the NEXT generation has materialized — without this a long
     // training accumulates one vocab-sized checkpoint per pass
     var prevGen: Option[org.apache.spark.rdd.RDD[(Seq[String], Long)]] = None
-    def freeGen(r: org.apache.spark.rdd.RDD[(Seq[String], Long)]): Unit = {
-      r.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true); ()
-      }
-      r.unpersist(false); ()
-    }
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     while (!done && merges.size < numMerges) {
@@ -144,26 +137,20 @@ object Bpe {
         // merely-persisted chain keeps the FULL logical plan — k passes
         // deep, the plan string alone (re-rendered per AQE update) grows
         // past any heap. Checkpointing materializes the vocab-sized
-        // frame AND truncates lineage to a scan. RDD-level so the
-        // superseded generation can be FREED (Dataset.checkpoint hides
-        // its internal RDD; its files/blocks would live to the end of
-        // training). Reliable checkpoint when a dir is configured,
-        // executor-local otherwise (the updateExactIndex convention).
+        // frame AND truncates lineage to a scan (Pins.cutCount).
         val gen = vocab.map { case (syms, cnt) =>
             (rules.foldLeft(syms) { case (s, (l, r)) => mergeOnce(s, l, r) },
               cnt)
           }.rdd
-        if (spark.sparkContext.getCheckpointDir.isDefined) gen.checkpoint()
-        else { gen.localCheckpoint(); () }
-        gen.count()
+        Pins.cutCount(gen)
         vocab.unpersist(false)
-        prevGen.foreach(freeGen)
+        prevGen.foreach(Pins.free)
         prevGen = Some(gen)
         vocab = spark.createDataset(gen)
       }
     }
     vocab.unpersist(false)
-    prevGen.foreach(freeGen)
+    prevGen.foreach(Pins.free)
     merges.toSeq
   }
 

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Pins
 
 /** Document deduplication for training-data pipelines — exact and
   * near-duplicate (MinHash+LSH, SimHash, n-gram Jaccard). All builtin
@@ -1008,10 +1009,7 @@ object Dedup {
                        batch: DataFrame, idCol: String, textCol: String)
       : DataFrame = {
     val novel0 = dedupAgainstIndex(store, prefix, batch, idCol, textCol)
-    val novel =
-      if (batch.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        novel0.checkpoint()
-      else novel0.localCheckpoint()
+    val novel = Pins.cut(novel0)
     store.append(s"$prefix.hashes",
       novel.select(xxhash64(col(textCol)).as("content_hash"),
         col(idCol).as("survivor_id")))
@@ -1133,10 +1131,7 @@ object Dedup {
                        threshold: Double = 0.5): DataFrame = {
     val novel0 = dedupFuzzyAgainstIndex(store, prefix, batch, idCol,
       textCol, threshold)
-    val novel =
-      if (batch.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        novel0.checkpoint()
-      else novel0.localCheckpoint()
+    val novel = Pins.cut(novel0)
     val meta = store.read(s"$prefix.meta").head()
     val (k, bands) = (meta.getAs[Int]("k"), meta.getAs[Int]("bands"))
     val (ngram, seed) = (meta.getAs[Int]("ngram"), meta.getAs[Int]("seed"))

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.ops.Pins
 
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (`Array[Float]`) — builder-prompt north star; no reference analog.
@@ -982,10 +983,7 @@ object Similarity {
     val (m, sub) = (meta.getAs[Int]("m"), meta.getAs[Int]("sub"))
     val books = store.read(s"$prefix.books")
     val coded0 = pqEncodeWith(batch, idCol, vecCol, books, m, sub)
-    val coded =
-      if (batch.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        coded0.checkpoint()
-      else coded0.localCheckpoint()
+    val coded = Pins.cut(coded0)
     store.append(s"$prefix.codes", coded)
     coded
   }
@@ -1121,10 +1119,7 @@ object Similarity {
       : DataFrame = {
     val stats = store.read(s"$prefix.stats")
     val coded0 = sqEncode(batch, idCol, vecCol, stats)
-    val coded =
-      if (batch.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        coded0.checkpoint()
-      else coded0.localCheckpoint()
+    val coded = Pins.cut(coded0)
     store.append(s"$prefix.codes", coded)
     coded
   }
@@ -1187,10 +1182,7 @@ object Similarity {
       col(vecCol).cast("array<double>").as("v"))
     val assigned0 = base.join(
       assignBuckets(base, cents.select(col("cid"), col("cv"))), "id")
-    val assigned =
-      if (batch.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        assigned0.checkpoint()
-      else assigned0.localCheckpoint()
+    val assigned = Pins.cut(assigned0)
     store.append(s"$prefix.buckets", assigned)
     assigned.select(col("id"), col("cid"))
   }
@@ -1520,10 +1512,6 @@ object Similarity {
     require(k >= 1, s"k must be >= 1, got $k")
     require(iters >= 0 && iters <= 10,
       s"iters must be in [0, 10], got $iters")
-    val spark = emb.sparkSession
-    def pin(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val base = emb.select(col(idCol).as("__id"), col(vecCol).as("__v"))
       .withColumn("__n", norm2Decimal(col("__v")))
       .persist()
@@ -1540,7 +1528,7 @@ object Similarity {
         else cosine(col("qv"), col("cv"))
       joined.select(col("query_id"), col("cand_id"), cos.as("cosine"))
     }
-    var g = pin(seed.getOrElse(
+    var g = Pins.cut(seed.getOrElse(
       lshBucketTopK(emb, emb, idCol, vecCol, k, bits = lshBits,
         bands = lshBands, deterministic = deterministic))
       .select(col("query_id"), col("cand_id"), col("cosine")))
@@ -1558,9 +1546,11 @@ object Similarity {
         // score only pairs the graph doesn't already hold
         .join(g.select(col("query_id"), col("cand_id")),
           Seq("query_id", "cand_id"), "left_anti")
-      g = pin(topKPerQuery(
+      val next = Pins.cut(topKPerQuery(
         g.unionByName(rescore(twoHop)), "cosine", k, ascending = false)
         .select(col("query_id"), col("cand_id"), col("cosine")))
+      Pins.free(g)
+      g = next
     }
     base.unpersist()
     // re-attach ranks (topKPerQuery emits rnk, dropped across rounds to

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import graft.ops.Pins
 
 /** WordPiece subword tokenization — the third member of the tokenizer
   * family next to [[Bpe]] (frequency-greedy merges) and [[UnigramLm]]
@@ -113,14 +114,6 @@ object WordPiece {
     // superseded generation's checkpoint, freed once the next one is
     // materialized (the Bpe.learnMerges lineage discipline)
     var prevGen: Option[org.apache.spark.rdd.RDD[(Seq[String], Long)]] = None
-    def freeGen(r: org.apache.spark.rdd.RDD[(Seq[String], Long)]): Unit = {
-      r.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .delete(p, true); ()
-      }
-      r.unpersist(false); ()
-    }
     val pieces = scala.collection.mutable.ArrayBuffer.empty[String]
     var done = false
     while (!done && pieces.size < numMerges) {
@@ -157,17 +150,15 @@ object WordPiece {
           val gen = vocab.map { case (syms, cnt) =>
               (mergeOnce(syms, best.l, best.r), cnt)
             }.rdd
-          if (spark.sparkContext.getCheckpointDir.isDefined) gen.checkpoint()
-          else { gen.localCheckpoint(); () }
-          gen.count()
+          Pins.cutCount(gen)
           vocab.unpersist(false)
-          prevGen.foreach(freeGen)
+          prevGen.foreach(Pins.free)
           prevGen = Some(gen)
           vocab = spark.createDataset(gen)
       }
     }
     vocab.unpersist(false)
-    prevGen.foreach(freeGen)
+    prevGen.foreach(Pins.free)
     pieces.toSeq
   }
 

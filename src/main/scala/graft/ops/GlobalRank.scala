@@ -56,19 +56,11 @@ object GlobalRank {
             else df.sparkSession.sessionState.conf.numShufflePartitions
     val sorted = rangedFrame(df, sortCols, p)
     // pin partitioning + order across the counts action and the final
-    // plan: reliable checkpoint when a checkpoint dir is configured
-    // (survives executor loss), executor-local otherwise (test/local
-    // runs — an executor loss there kills the JVM anyway)
-    val ranged =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        sorted.checkpoint()
-      // lazy: the per-partition metadata collect just below is the
-      // FIRST action on the frame, so it materializes the checkpoint in
-      // the same job — one pass instead of an eager-pin job plus a
-      // collect job (guide §5: reuse, with the minimum action count).
-      // Consumers after the collect read the same pinned blocks, so the
-      // partition/offset alignment guarantee is unchanged.
-      else sorted.localCheckpoint(eager = false)
+    // plan. Lazy: the per-partition metadata collect just below is the
+    // FIRST action on the frame, so it materializes the pin in the same
+    // job; consumers after it read the same pinned blocks, so the
+    // partition/offset alignment holds.
+    val ranged = Pins.cut(sorted, eager = false)
     val withId = ranged.withColumn("__mid", monotonically_increasing_id())
     val pidOf = shiftright(col("__mid"), 33).cast("int")
     val idxOf = col("__mid").bitwiseAND(lit((1L << 33) - 1))
@@ -116,16 +108,7 @@ object GlobalRank {
     val p = if (partitions > 0) partitions
             else df.sparkSession.sessionState.conf.numShufflePartitions
     val sorted = rangedFrame(df, sortCols, p)
-    val ranged =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        sorted.checkpoint()
-      // lazy: the per-partition metadata collect just below is the
-      // FIRST action on the frame, so it materializes the checkpoint in
-      // the same job — one pass instead of an eager-pin job plus a
-      // collect job (guide §5: reuse, with the minimum action count).
-      // Consumers after the collect read the same pinned blocks, so the
-      // partition/offset alignment guarantee is unchanged.
-      else sorted.localCheckpoint(eager = false)
+    val ranged = Pins.cut(sorted, eager = false) // as in globalRowNumberWithTotal
     val withId = ranged.withColumn("__mid", monotonically_increasing_id())
     val pidOf = shiftright(col("__mid"), 33).cast("int")
     val idxOf = col("__mid").bitwiseAND(lit((1L << 33) - 1))
@@ -269,16 +252,7 @@ object GlobalRank {
     val p = if (partitions > 0) partitions
             else df.sparkSession.sessionState.conf.numShufflePartitions
     val sorted = rangedFrame(df, sortCols, p)
-    val ranged =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        sorted.checkpoint()
-      // lazy: the per-partition metadata collect just below is the
-      // FIRST action on the frame, so it materializes the checkpoint in
-      // the same job — one pass instead of an eager-pin job plus a
-      // collect job (guide §5: reuse, with the minimum action count).
-      // Consumers after the collect read the same pinned blocks, so the
-      // partition/offset alignment guarantee is unchanged.
-      else sorted.localCheckpoint(eager = false)
+    val ranged = Pins.cut(sorted, eager = false) // as in globalRowNumberWithTotal
     val withId = ranged.withColumn("__mid", monotonically_increasing_id())
     val pidOf = shiftright(col("__mid"), 33).cast("int")
     val idxOf = col("__mid").bitwiseAND(lit((1L << 33) - 1))

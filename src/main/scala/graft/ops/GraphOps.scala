@@ -44,7 +44,6 @@ object GraphOps {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingPm >= 0 && dampingPm <= 1000,
       s"dampingPm must be in [0, 1000], got $dampingPm")
-    val spark = edges.sparkSession
     val base = (1000L - dampingPm) * 1000L // (1−d)·1e6 in micro, exact
 
     // pin the raw edge frame: deg, the contribEdges join, and the node
@@ -60,23 +59,22 @@ object GraphOps {
       .unionByName(e.select(col("__dst").as("node")))
       .distinct().persist()
 
-    def pin(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-
+    // each round's eager cut supersedes the last, which is freed
     var ranks = nodes.withColumn("rank_micro", lit(1000000L))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val inMass = contribEdges
         .join(ranks.withColumnRenamed("node", "__src"), Seq("__src"))
         .select(col("__dst").as("node"),
           expr("rank_micro div __outdeg").as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__m"))
-      ranks = pin(nodes
+      val next = Pins.cut(nodes
         .join(inMass, Seq("node"), "left")
         .select(col("node"),
           (lit(base) +
             expr(s"($dampingPm * coalesce(__m, 0L)) div 1000"))
             .as("rank_micro")))
+      if (i > 1) Pins.free(ranks)
+      ranks = next
     }
     e.unpersist()
     contribEdges.unpersist()
@@ -103,7 +101,6 @@ object GraphOps {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(dampingPm >= 0 && dampingPm <= 1000,
       s"dampingPm must be in [0, 1000], got $dampingPm")
-    val spark = edges.sparkSession
     val base = (1000L - dampingPm) * 1000L
     val e = edges.select(col(srcCol).cast("long").as("__src"),
       col(dstCol).cast("long").as("__dst")).persist()
@@ -121,25 +118,23 @@ object GraphOps {
           .otherwise(lit(0L)).as("__restart"))
       .persist()
 
-    def pin(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-
     var ranks = nodes.select(col("node"),
       when(col("__seed"), lit(1000000L)).otherwise(lit(0L))
         .as("rank_micro"))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val inMass = contribEdges
         .join(ranks.withColumnRenamed("node", "__src"), Seq("__src"))
         .select(col("__dst").as("node"),
           expr("rank_micro div __outdeg").as("__c"))
         .groupBy(col("node")).agg(sum(col("__c")).as("__m"))
-      ranks = pin(nodes
+      val next = Pins.cut(nodes
         .join(inMass, Seq("node"), "left")
         .select(col("node"),
           (col("__restart") +
             expr(s"($dampingPm * coalesce(__m, 0L)) div 1000"))
             .as("rank_micro")))
+      if (i > 1) Pins.free(ranks)
+      ranks = next
     }
     e.unpersist(); contribEdges.unpersist(); nodes.unpersist()
     ranks
@@ -169,18 +164,14 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int): DataFrame = {
     require(iters >= 0 && iters <= 64, s"iters must be in [0, 64], got $iters")
-    val spark = edges.sparkSession
-    def pin(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
     val und = edges.select(col(srcCol).cast("long").as("a"),
         col(dstCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    val bi = pin(und.unionByName(
+    val bi = Pins.cut(und.unionByName(
         und.select(col("b").as("a"), col("a").as("b"))).distinct())
-    val nodes = pin(bi.select(col("a").as("node")).distinct())
+    val nodes = Pins.cut(bi.select(col("a").as("node")).distinct())
     var labels = nodes.withColumn("community", col("node"))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val nbrLabels = bi
         .join(labels.withColumnRenamed("node", "b"), Seq("b"))
         .select(col("a").as("node"), col("community"))
@@ -190,10 +181,13 @@ object GraphOps {
         .groupBy(col("node"))
         .agg(max_by(col("community"),
           struct(col("__c"), -col("community"))).as("__new"))
-      labels = pin(nodes.join(adopted, Seq("node"), "left")
+      val next = Pins.cut(nodes.join(adopted, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("__new"), col("node")).as("community")))
+      if (i > 1) Pins.free(labels)
+      labels = next
     }
+    Pins.free(bi) // only the rounds read it
     labels
   }
 
@@ -295,40 +289,24 @@ object GraphOps {
                   sources: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64,
       s"maxHops must be in [1, 64], got $maxHops")
-    val spark = edges.sparkSession
-    // r13 (guide §5 lineage control with the minimum action count): the
-    // loop previously ran TWO actions per round — an eager checkpoint
-    // job and then a count job over the pinned blocks. The convergence
-    // count now rides the checkpoint materialization itself: the frame
-    // is MARKED for (local) checkpointing lazily, and the count is the
-    // first action, so one job both materializes the pin and returns n.
-    // Later consumers read the same pinned blocks — the
-    // plan-stays-one-round-deep property is unchanged.
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def pinCount(df: DataFrame): (DataFrame, Long) = {
-      val pinned =
-        if (reliable) df.checkpoint() // reliable ckpt re-runs anyway; keep eager
-        else df.localCheckpoint(eager = false)
-      (pinned, pinned.count())
-    }
-    // frames with no adjacent count pin lazily too: the next round's
-    // count job (their first consumer) materializes them in-line
-    def pinLazy(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint()
-      else df.localCheckpoint(eager = false)
+    // one action per round: the convergence count materializes the
+    // round's pin (Pins.cutCount); frames with no adjacent count pin
+    // lazily too, and the next round's count job (their first consumer)
+    // materializes them in-line
     val und = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val adj = pinLazy(und.select(col("a").as("s"), col("b").as("t"))
-      .unionByName(und.select(col("b").as("s"), col("a").as("t"))))
-    var (frontier, n) = pinCount(sources.select(
+    val adj = Pins.cut(und.select(col("a").as("s"), col("b").as("t"))
+      .unionByName(und.select(col("b").as("s"), col("a").as("t"))),
+      eager = false)
+    var (frontier, n) = Pins.cutCount(sources.select(
       col(sources.columns.head).cast("long").as("node")).distinct())
     var visited = frontier.withColumn("hop", lit(0))
     val acc = scala.collection.mutable.ArrayBuffer(visited)
     var k = 1
     while (n > 0 && k <= maxHops) {
-      val (next, m) = pinCount(frontier
+      val (next, m) = Pins.cutCount(frontier
         .join(adj.withColumnRenamed("s", "node"), Seq("node"))
         .select(col("t").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti"))
@@ -336,7 +314,7 @@ object GraphOps {
       if (n > 0) {
         val labeled = next.withColumn("hop", lit(k))
         acc += labeled
-        visited = pinLazy(visited.unionByName(labeled))
+        visited = Pins.cut(visited.unionByName(labeled), eager = false)
         frontier = next
       }
       k += 1
@@ -368,37 +346,26 @@ object GraphOps {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxIter >= 1 && maxIter <= 64,
       s"maxIter must be in [1, 64], got $maxIter")
-    val spark = edges.sparkSession
-    // same one-action-per-round fold as [[hopDistance]]: lazy (local)
-    // checkpoint + count materializes the pin and measures convergence
-    // in a single job
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def pinCount(df: DataFrame): (DataFrame, Long) = {
-      val pinned =
-        if (reliable) df.checkpoint()
-        else df.localCheckpoint(eager = false)
-      (pinned, pinned.count())
-    }
-    def pinLazy(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint()
-      else df.localCheckpoint(eager = false)
+    // same one-action-per-round fold as [[hopDistance]]
     val und = edges.select(
         least(col(srcCol), col(dstCol)).cast("long").as("a"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
       .filter(col("a") =!= col("b")).distinct()
-    val adj = pinLazy(und.select(col("a").as("s"), col("b").as("t"))
-      .unionByName(und.select(col("b").as("s"), col("a").as("t"))))
+    val adj = Pins.cut(und.select(col("a").as("s"), col("b").as("t"))
+      .unionByName(und.select(col("b").as("s"), col("a").as("t"))),
+      eager = false)
     def degrees(nodes: DataFrame): DataFrame =
       adj.join(nodes.withColumnRenamed("node", "s"), Seq("s"))
         .join(nodes.withColumnRenamed("node", "t"), Seq("t"))
         .groupBy(col("s").as("node")).agg(count(lit(1)).as("deg"))
-    var (nodes, n) = pinCount(adj.select(col("s").as("node")).distinct())
+    var (nodes, n) = Pins.cutCount(adj.select(col("s").as("node")).distinct())
     var converged = false
     var round = 0
     while (!converged && round < maxIter && n > 0) {
-      val (survivors, m) = pinCount(degrees(nodes)
+      val (survivors, m) = Pins.cutCount(degrees(nodes)
         .where(col("deg") >= k).select(col("node")))
       converged = m == n
+      Pins.free(nodes)
       nodes = survivors
       n = m
       round += 1

@@ -33,23 +33,10 @@ object Hierarchy {
                 maxDepth: Int, requireAcyclic: Boolean = true): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 64,
       s"maxDepth must be in [1, 64], got $maxDepth")
-    val spark = edges.sparkSession
-    // one action per hop (the GraphOps.hopDistance r13 fold): the
-    // frontier is marked for lazy (local) checkpointing and the
-    // convergence count is its first action, so a single job both
-    // materializes the pin and measures the frontier
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    def pinCount(df: DataFrame): (DataFrame, Long) = {
-      val pinned =
-        if (reliable) df.checkpoint()
-        else df.localCheckpoint(eager = false)
-      (pinned, pinned.count())
-    }
-    def pinLazy(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint()
-      else df.localCheckpoint(eager = false)
-    val e = pinLazy(edges.select(col(childCol).cast("long").as("__c"),
-      col(parentCol).cast("long").as("__p")).distinct())
+    // one action per hop (the GraphOps.hopDistance fold): the
+    // convergence count materializes the frontier's pin (Pins.cutCount)
+    val e = Pins.cut(edges.select(col(childCol).cast("long").as("__c"),
+      col(parentCol).cast("long").as("__p")).distinct(), eager = false)
     // frontier: the depth-k ancestor of each node; closure accumulates
     var frontier = e.select(col("__c").as("node"),
       col("__p").as("ancestor"), lit(1).as("depth"))
@@ -62,7 +49,7 @@ object Hierarchy {
       // along several paths; without dedup diamond-heavy DAGs grow the
       // frontier exponentially and the closure breaks its one-row-per-
       // (node, ancestor, depth) contract
-      val (f2, m) = pinCount(frontier
+      val (f2, m) = Pins.cutCount(frontier
         .join(e.withColumnRenamed("__c", "ancestor"), Seq("ancestor"))
         .select(col("node"), col("__p").as("ancestor"),
           (col("depth") + 1).as("depth"))

@@ -515,7 +515,6 @@ object RankTests {
                         loserCol: String, nCol: String,
                         iters: Int): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")
-    val spark = matches.sparkSession
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     // ids keep their native type (string model names, long ids alike)
     val u = matches.select(col(winnerCol).as("__i"),
@@ -532,12 +531,9 @@ object RankTests {
     val wins = u.groupBy(col("__i")).agg(sum(col("__n")).as("__w"))
     val nodes = g.select(col("__i").as("node")).distinct().persist()
 
-    def pin(df: DataFrame): DataFrame =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-
+    // each round's eager cut supersedes the last, which is freed
     var ranks = nodes.withColumn("rating_micro", lit(1000000L))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val denom = g
         .join(ranks.select(col("node").as("__i"),
           col("rating_micro").as("__ri")), Seq("__i"))
@@ -547,7 +543,7 @@ object RankTests {
           expr("(__nij * 1000000000000) div (CAST(__ri AS DECIMAL(38,0))"
             + " + __rj)").as("__t"))
         .groupBy(col("__i")).agg(sum(col("__t")).as("__d"))
-      ranks = pin(nodes
+      val next = Pins.cut(nodes
         .join(wins.withColumnRenamed("__i", "node"), Seq("node"), "left")
         .join(denom.withColumnRenamed("__i", "node"), Seq("node"), "left")
         .select(col("node"),
@@ -556,6 +552,8 @@ object RankTests {
               |div greatest(CAST(1 AS DECIMAL(38,0)), coalesce(__d, 0))
               |AS BIGINT)""".stripMargin.replace("\n", " ")))
             .as("rating_micro")))
+      if (i > 1) Pins.free(ranks)
+      ranks = next
     }
     g.unpersist(); nodes.unpersist()
     ranks.withColumnRenamed("node", "player")

@@ -322,4 +322,38 @@ class GraphOpsSpec extends SparkTestBase {
       .as[(Long, Long, Long, Option[Long])].collect().head
     assert(partial._1 == 5L, s"got $partial")
   }
+
+  test("iterative operators free superseded rounds: pins left do not grow with iters") {
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 4L))
+      .toDF("src", "dst")
+    // persistent RDDs a call leaves registered (its result held here)
+    def left(run: Int => org.apache.spark.sql.DataFrame, iters: Int): Int = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = run(iters)
+      val grown = (sc.getPersistentRDDs.keySet -- before).size
+      assert(out.count() == 5)
+      grown
+    }
+    val pr = (i: Int) => GraphOps.pageRank(edges, "src", "dst", i)
+    val lpa = (i: Int) => GraphOps.labelPropagation(edges, "src", "dst", i)
+    assert(left(pr, 6) == left(pr, 1), "pageRank keeps one pin per round")
+    assert(left(lpa, 6) == left(lpa, 1),
+      "labelPropagation keeps one pin per round")
+  }
+
+  test("with a checkpoint dir, pageRank leaves only its last round's files") {
+    val dir = tmpDir("graft-pagerank-ckpt")
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    val local = ranks(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)), 4)
+    org.apache.spark.CheckpointDirBridge.withCheckpointDir(
+        spark.sparkContext, dir) {
+      val got = GraphOps.pageRank(edges, "src", "dst", 4)
+        .as[(Long, Long)].collect().toMap
+      assert(got == local, "the reliable branch must rank as the local one")
+      val rddDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(p => p.getFileName.toString.startsWith("rdd-")).count()
+      assert(rddDirs == 1L, s"$rddDirs checkpointed rounds left in $dir")
+    }
+  }
 }

@@ -12,13 +12,15 @@ package graft
 class LazyBuilderSpec extends SparkTestBase {
 
   test("gate construction runs zero Spark jobs of any kind") {
-    // the pinning builders q339/q341/q363 plus the six small gates the
-    // fixed-cost benchmark runs; fixture reads take their schema from
-    // parquet footers (graft.io.ParquetMeta), so not even the reader's
+    // the pinning builders q339/q341/q363, the six small gates the
+    // fixed-cost benchmark runs, and the flagship (SparkEntry.
+    // registerViews); fixture reads take their schema from parquet
+    // footers (graft.io.ParquetMeta), so not even the reader's
     // schema-inference job may fire
     val gates = Seq("q339_semantic_dedup", "q341_semantic_dedup_lsh",
       "q363_semantic_dedup_cc", "q3_watermark", "q13_scalar_funcs",
-      "q21_token_count", "q38_array_funcs", "q182_twap", "q300_trend_prop")
+      "q21_token_count", "q38_array_funcs", "q182_twap", "q300_trend_prop",
+      "q0_flagship")
     val (built, jobs) = JobProbe.jobs(spark) {
       gates.map(g => g -> SparkEntry.queries(g)(spark, sf("sf0.001"))).toMap
     }
