@@ -24,7 +24,8 @@ import scala.util.{Failure, Success, Try}
   * Output: the bare JSON line is the LAST stdout line (build.sbt sets
   * `run / outputStrategy := StdoutOutput` so sbt's forked-run logger
   * cannot prefix it with [info]), and the same line is persisted to
-  * SPARK_GRAFT_BENCH_OUT (default ./bench_out.json, cwd-relative).
+  * SPARK_GRAFT_BENCH_OUT (default target/bench_out.json, cwd-relative;
+  * `target/` is build output, so a default run rewrites no tracked file).
   *
   * Line-size budget (round-5 verdict: the driver's tail window is 2000
   * bytes and the 81-query 3-decimal line was 2022 — `parsed: null` for
@@ -172,9 +173,12 @@ object Bench {
         n -> (if (t < 0) -1L else math.rint(t * 10).toLong) }
       val total = round3(results.map(_._2).filter(_ >= 0).sum / 10.0)
       val json = serialize(results, total, env.sfDir, env.reps)
-      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-      try java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json + "\n")
-      catch { case e: Throwable =>
+      val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_out.json")
+      try {
+        val out = java.nio.file.Paths.get(outPath).toAbsolutePath
+        java.nio.file.Files.createDirectories(out.getParent)
+        java.nio.file.Files.writeString(out, json + "\n")
+      } catch { case e: Throwable =>
         System.err.println(s"[bench] $outPath write failed: ${e.getMessage}") }
       println(json)
     }

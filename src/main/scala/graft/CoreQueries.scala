@@ -27,12 +27,25 @@ object CoreQueries {
     // on the read schema and surfaces ONE contract: after t(), events.ts is
     // ALWAYS epoch-MICROSECONDS as LongType. µs (not ns) because DuckDB
     // timestamps are µs-precision, so every oracle comparison is exact.
-    // nanosAsLong stays on so a nanos-encoded fixture still reads (as long).
-    if (name == "events")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // the session keeps nanosAsLong on so a nanos-encoded fixture still
+    // reads (as long).
+    if (name == "events") requireNanosAsLong(spark)
     val df = graft.io.ParquetMeta.read(spark, s"$dir/$name.parquet")
     if (name == "events" && df.schema.fieldNames.contains("ts"))
       df.withColumn("ts", tsToMicros(df)) else df
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Fails unless the session reads INT64 nanos timestamps as long, as
+    * every graft session does (`GraftSession` pins it). Readers check the
+    * setting and never write it: a conf write at read time would change a
+    * session that other work shares. */
+  private[graft] def requireNanosAsLong(spark: SparkSession): Unit = {
+    val v = spark.conf.get(NanosAsLong, "false")
+    if (!v.trim.equalsIgnoreCase("true"))
+      throw new IllegalStateException(s"GRAFT_NANOS_AS_LONG: reading events " +
+        s"needs $NanosAsLong=true on the session (GraftSession sets it), found $v")
   }
 
   /** The normalized table reader, exposed for the schema-contract spec. */
@@ -329,7 +342,7 @@ object CoreQueries {
   // memory-sink result must equal the batch oracle exactly (stream/batch
   // parity is the whole point of sharing the Dataset API).
   def q40_stream_windowed(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(s)
     graft.streaming.EventStream.runBatchOfStream(
       s, s"$dir/events.parquet", "q40_stream_mem", df =>
         df.withColumn("ts_us", tsAsTimestamp(df))
@@ -767,7 +780,7 @@ object CoreQueries {
   // the emitted set equals the batch inequality join (the oracle).
   // All time math in epoch-micros timestamps (both engines µs-exact).
   def q54_stream_stream_join(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(s)
     graft.streaming.EventStream.runBatchOfStream(
       s, s"$dir/events.parquet", "q54_join_mem", df => {
         val base = df.withColumn("ts_us", tsAsTimestamp(df))
@@ -813,7 +826,7 @@ object CoreQueries {
   // lookup shape of a streaming ingest pipeline. Deterministic: inner
   // equi-join, finite replay ⇒ output = the batch join.
   def q60_stream_static_join(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(s)
     val nation = t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
     graft.streaming.EventStream.runBatchOfStream(
       s, s"$dir/events.parquet", "q60_enrich_mem", df =>

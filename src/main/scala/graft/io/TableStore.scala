@@ -1,6 +1,10 @@
 package graft.io
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.{FooterBridge, ParquetFileFormat}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Target-table storage abstraction.
@@ -17,7 +21,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     (`clickhouse/jdbsChSession.scala:316-329`). `read` and `count`
   *     use footer metadata only ([[ParquetMeta]]): building a read and
   *     counting rows launch no Spark job, as the reference takes its
-  *     row counts from ClickHouse metadata.
+  *     row counts from ClickHouse metadata. An overwrite whose frame is
+  *     an untransformed parquet scan (one unpartitioned, unbucketed
+  *     parquet relation read with no option but its path, all of its
+  *     data columns in order, every file's footer schema equal to that
+  *     data schema) copies the scan's files instead of decoding and
+  *     re-encoding every row: no Spark job, and the target reads back
+  *     exactly as the source does. This is the reference's `recreate`,
+  *     one server-side `INSERT INTO ... SELECT *` with no client-side
+  *     decode. Every other frame goes through Spark's parquet writer.
   *   - At cluster scale the same interface maps onto catalog tables
   *     (`saveAsTable` / `insertInto` with dynamic partition overwrite);
   *     nothing in SyncEngine assumes a local filesystem.
@@ -38,6 +50,15 @@ trait TableStore {
     overwrite(table, read(table).repartition(targetFiles))
 }
 
+/** A batch scan of a parquet relation that is not a catalog table. */
+private object BatchParquet {
+  def unapply(p: LogicalPlan): Option[(LogicalRelation, HadoopFsRelation)] = p match {
+    case l @ LogicalRelation(r: HadoopFsRelation, _, None, false, _)
+        if r.fileFormat.isInstanceOf[ParquetFileFormat] => Some((l, r))
+    case _ => None
+  }
+}
+
 final class ParquetTableStore(val spark: SparkSession, root: String)
     extends TableStore {
 
@@ -56,18 +77,70 @@ final class ParquetTableStore(val spark: SparkSession, root: String)
   /** Stage to a sibling temp dir, then swap. The staging write fully
     * materializes before the old data is touched, so `overwrite(t, f(read(t)))`
     * is safe (parquet self-overwrite otherwise corrupts: the lazy plan would
-    * scan files that the write is deleting). */
+    * scan files that the write is deleting). An untransformed parquet
+    * scan is staged by copying its files ([[scanFiles]]). */
   override def overwrite(table: String, df: DataFrame): Unit =
-    stagedSwap(table)(df.write.mode(SaveMode.Overwrite).parquet(_))
+    scanFiles(df) match {
+      case Some(files) => stagedSwap(table)(copyFiles(files, _))
+      case None => stagedSwap(table)(df.write.mode(SaveMode.Overwrite).parquet(_))
+    }
+
+  /** The files of `df` when it is an untransformed parquet scan, else
+    * None. Its optimized plan must be exactly one batch parquet relation,
+    * unpartitioned, unbucketed, not a catalog table, read with no option
+    * but its path; its output must be the relation's data schema in
+    * order; and every file's footer must convert to that data schema
+    * under the session's conf. The files are the ones the scan reads, in
+    * path order; there must be at least one, and their names must not
+    * collide. A frame whose analyzed plan has any other leaf (a stream's
+    * micro-batch, a local relation, a join) is not optimized here. */
+  private def scanFiles(df: DataFrame): Option[Seq[FileStatus]] = {
+    val qe = df.queryExecution
+    val relation = qe.analyzed.collectLeaves() match {
+      case Seq(BatchParquet(_, _)) => qe.optimizedPlan match {
+        case BatchParquet(l, r) if r.partitionSchema.isEmpty &&
+            r.bucketSpec.isEmpty && r.options.keySet.forall(_.equalsIgnoreCase("path")) &&
+            DataTypeUtils.fromAttributes(l.output) == r.dataSchema => Some(r)
+        case _ => None
+      }
+      case _ => None
+    }
+    relation.flatMap { r =>
+      val files = r.location.listFiles(Nil, Nil).flatMap(_.files)
+        .map(_.fileStatus).sortBy(_.getPath.toString)
+      val conf = spark.sessionState.newHadoopConf()
+      Option.when(files.nonEmpty &&
+          files.map(_.getPath.getName).distinct.size == files.size &&
+          FooterBridge.readSchemas(spark, files, conf).forall(_.contains(r.dataSchema)))(files)
+    }
+  }
+
+  /** Copies `files` into the new directory `to` under their own names.
+    * The sources are only read: never moved or linked, since they may be
+    * another table's files or the caller's input. */
+  private def copyFiles(files: Seq[FileStatus], to: String): Unit = {
+    val f = fs
+    val dst = new Path(to)
+    f.mkdirs(dst)
+    files.foreach { s =>
+      val p = s.getPath
+      if (!FileUtil.copy(p.getFileSystem(f.getConf), p, f, new Path(dst, p.getName),
+          false, false, f.getConf))
+        throw new java.io.IOException(s"copy of $p to $dst failed")
+    }
+  }
 
   /** Write `table`'s new contents to a sibling staging dir with
-    * `write`, then swap it in for the old dir. */
+    * `write`, then swap it in for the old dir. A failed write leaves the
+    * old dir as it was and removes its staging dir (a failed Spark job's
+    * straggling tasks may still write into it after the removal). */
   private def stagedSwap(table: String)(write: String => Unit): Unit = {
     val target  = dir(table)
     val staging = new Path(root,
       s".staging-${table.replace('.', '_')}-${System.nanoTime()}")
-    write(staging.toString)
     val f = fs
+    try write(staging.toString)
+    catch { case e: Throwable => f.delete(staging, true); throw e }
     if (f.exists(target)) f.delete(target, true)
     f.mkdirs(target.getParent)
     if (!f.rename(staging, target))

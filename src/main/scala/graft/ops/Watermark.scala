@@ -17,10 +17,12 @@ import org.apache.spark.sql.functions._
   *   (`clickhouse/jdbsChSession.scala:123-177`). The reference collects it
   *   to the driver and renders a literal NOT-IN list
   *   (`table/Table.scala:59-84`) — fatal at scale (SURVEY.md §7.4); here it
-  *   STAYS distributed and feeds a left_anti join. NULL caveat: SQL NOT IN
-  *   with NULLs differs from left_anti; the reference's keys are non-null
-  *   integers (`rs.getLong`), so left_anti is exact for the supported arity
-  *   1–3 integer keys.
+  *   STAYS distributed and feeds a left_anti join. Duplicate keys on the
+  *   join's right side do not change its result, so the keys are not
+  *   deduplicated first (no aggregate, no shuffle of its own). NULL
+  *   caveat: SQL NOT IN with NULLs differs from left_anti; the reference's
+  *   keys are non-null integers (`rs.getLong`), so left_anti is exact for
+  *   the supported arity 1–3 integer keys.
   */
 object Watermark {
 
@@ -50,12 +52,12 @@ object Watermark {
                      row.getLong(1))
     }
 
-  /** Distinct key tuples of arity 1–3 — kept as a DataFrame, never
-    * collected. */
+  /** The target's key tuples of arity 1–3, duplicates kept (they do not
+    * change a left_anti join) — kept as a DataFrame, never collected. */
   def keySet(target: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty && keys.length <= 3,
       "sync_by_columns supports only up to three fields with Int type")
-    target.select(keys.map(col): _*).distinct()
+    target.select(keys.map(col): _*)
   }
 
   /** The watermark predicate `sync_col > maxVal` (`table/Table.scala:47-57`):

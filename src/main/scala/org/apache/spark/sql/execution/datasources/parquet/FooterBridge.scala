@@ -44,6 +44,14 @@ object FooterBridge {
       .map(_.asNullable)
   }
 
+  /** [[readSchema]] of each file, read in parallel; None for a file
+    * whose footer cannot be read. */
+  def readSchemas(spark: SparkSession, files: Seq[FileStatus],
+                  conf: Configuration): Seq[Option[StructType]] =
+    ThreadUtils.parmap(files, "graft-footers", 8) { f =>
+      scala.util.Try(readSchema(spark, f, conf)).toOption.flatten
+    }
+
   /** Σ row-group row counts over the files' footers, read in parallel.
     * The footers are read with their row groups: Spark's
     * `readParquetFootersInParallel` skips them and would count 0. */

@@ -104,4 +104,20 @@ class FixtureSchemaSpec extends SparkTestBase {
       assert(t.select(unix_micros(col("v"))).head().getLong(0) == us)
     }
   }
+
+  test("events reads need nanosAsLong on the session and never set it") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val before = spark.conf.get(key)
+    val clone = spark.newSession()
+    clone.conf.set(key, "false")
+    val dir = sf("sf0.001")
+    for (read <- Seq[() => Any](() => CoreQueries.tRead(clone, dir, "events"),
+                                () => CoreQueries.q40_stream_windowed(clone, dir))) {
+      val e = intercept[IllegalStateException](read())
+      assert(e.getMessage.startsWith("GRAFT_NANOS_AS_LONG"), e.getMessage)
+    }
+    assert(clone.conf.get(key) == "false")
+    assert(spark.conf.get(key) == before && before == "true")
+    assert(CoreQueries.tRead(clone, dir, "nation").count() > 0)
+  }
 }

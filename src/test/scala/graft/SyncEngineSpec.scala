@@ -142,6 +142,29 @@ class SyncEngineSpec extends SparkTestBase {
     assert(store.read("db.t").count() == 4)
   }
 
+  test("W4 append_notin: duplicate target keys, same rows, fewer jobs than distinct keys") {
+    val keys = Seq("id", "ver")
+    val spec = TableSpec(SyncOp.AppendNotIn, "db", "t",
+      syncByColumns = Some(keys)).validate()
+    // every key tuple (i, 1) appears three times in the target
+    val target = src((1 to 10).flatMap(i => (1 to 3).map(k => (i.toLong, s"t$i-$k", 1L))): _*)
+    val incoming = src((5 to 15).map(i => (i.toLong, s"n$i", 1L)) :+ ((5L, "v2", 2L)): _*)
+    val (store, eng) = freshEngine()
+    val (ref, _) = freshEngine()
+    Seq(store, ref).foreach(_.overwrite("db.t", target))
+    val (r, jobs) = JobProbe.jobs(spark)(eng.appendNotIn(spec, incoming))
+    // the previous form: a distinct key set on the join's right side
+    val (_, refJobs) = JobProbe.jobs(spark)(ref.append("db.t",
+      incoming.join(ref.read("db.t").select(keys.map(col): _*).distinct(), keys, "left_anti")))
+    def rows(st: ParquetTableStore) = st.read("db.t").select("id", "name", "ver")
+      .as[(Long, String, Long)].collect().sorted.toSeq
+    assert(r.rowsCopied == 6)
+    assert(rows(store) == rows(ref))
+    assert(rows(store).count(_._2.startsWith("n")) == 5)
+    assert(jobs.size < refJobs.size,
+      s"${jobs.map(_.callSite)} vs ${refJobs.map(_.callSite)}")
+  }
+
   test("W4 arity cap enforced at harvest") {
     val (_, eng) = freshEngine()
     intercept[IllegalArgumentException](
