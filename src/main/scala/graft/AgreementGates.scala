@@ -370,8 +370,7 @@ object AgreementGates {
           .agg(max(col("delta_pm")).as("max_delta_pm"))
         val meta = cells.agg(min(col("__bmin")).as("bucket"))
         val row = meta.crossJoin(agree).crossJoin(drift)
-        if (store.exists("mon.drift")) store.append("mon.drift", row)
-        else store.overwrite("mon.drift", row)
+        store.append("mon.drift", row)
       }, options = Map("maxFilesPerTrigger" -> "1"))
     profiles.unpersist(false)
     store.read("mon.drift")
@@ -419,8 +418,7 @@ object AgreementGates {
             graft.ops.Agreement.cellList(col("__i"), col("__j"),
               col("__nij")).as("__cells"))
           .transform(graft.ops.Agreement.weightedKappaOfCells(power = 1))
-        if (store.exists("mon.kappa")) store.append("mon.kappa", row)
-        else store.overwrite("mon.kappa", row)
+        store.append("mon.kappa", row)
       }, options = Map("maxFilesPerTrigger" -> "1"))
     store.read("mon.kappa")
       .select(col("bucket"), col("n"), col("kappa_w_ppm"))

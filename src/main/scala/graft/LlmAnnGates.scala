@@ -168,8 +168,7 @@ object LlmAnnGates {
         val res = graft.llm.Similarity.sqTopKIndexed(store, "sq",
           batch.where(col("vec_id") < 8), idCol = "vec_id",
           vecCol = "embedding", k = 5)
-        if (store.exists("sq.results")) store.append("sq.results", res)
-        else store.overwrite("sq.results", res)
+        store.append("sq.results", res)
       })
     store.read("sq.results")
       .select(col("query_id"), col("cand_id"),

@@ -355,8 +355,7 @@ object LlmDedupGates {
           .select(col("r.doc_id").as("doc_id"), col("r.text").as("text"))
         val novel = graft.llm.Dedup.updateExactIndex(store, "dd", withDups,
           idCol = "doc_id", textCol = "text")
-        if (store.exists("dd.novel")) store.append("dd.novel", novel)
-        else store.overwrite("dd.novel", novel)
+        store.append("dd.novel", novel)
       })
     store.read("dd.novel").select(col("doc_id"), col("text"))
   }

@@ -87,16 +87,22 @@ final class CatalogTableStore(val spark: SparkSession) extends TableStore {
     * rename it manually). Spark SQL has no exchange/REPLACE-swap for
     * catalog tables; single-writer task orchestration (C5 single-flight)
     * keeps the window from being raced in-process. */
-  override def overwrite(table: String, df: DataFrame): Unit = {
+  override def overwrite(table: String, df: DataFrame): Unit =
+    stagedSwap(table)(df.write.mode(SaveMode.Overwrite).saveAsTable(_))
+
+  /** Write `table`'s new contents to a fresh staging table with `write`,
+    * then swap it in by drop + rename. */
+  private def stagedSwap(table: String)(write: String => Unit): Unit = {
     ensureDatabases(Seq(table))
     val (db, t) = parse(table)
     cleanupStaging(db, t)
     val staging = stagingName(db, t)
-    df.write.mode(SaveMode.Overwrite).saveAsTable(staging)
+    write(staging)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"ALTER TABLE $staging RENAME TO $table")
   }
 
+  /** Creates a missing table with `saveAsTable`. */
   override def append(table: String, df: DataFrame): Unit = {
     ensureDatabases(Seq(table))
     if (!exists(table)) df.write.saveAsTable(table)
@@ -117,18 +123,11 @@ final class CatalogTableStore(val spark: SparkSession) extends TableStore {
     * analog of MergeTree's ORDER BY clustering. Uses staged-swap rename
     * like [[overwrite]]. */
   def overwriteBucketed(table: String, df: DataFrame,
-                        numBuckets: Int, bucketCols: Seq[String]): Unit = {
-    ensureDatabases(Seq(table))
-    val (db, t) = parse(table)
-    cleanupStaging(db, t)
-    val staging = stagingName(db, t)
-    df.write.mode(SaveMode.Overwrite)
+                        numBuckets: Int, bucketCols: Seq[String]): Unit =
+    stagedSwap(table)(df.write.mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(staging)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
-  }
+      .saveAsTable(_))
 
   /** S10: primary key kept in table properties. */
   def setPrimaryKey(table: String, pk: Seq[String]): Unit =

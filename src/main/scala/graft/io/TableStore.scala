@@ -1,10 +1,12 @@
 package graft.io
 
 import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{FooterBridge, ParquetFileFormat}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Target-table storage abstraction.
@@ -33,17 +35,38 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *   - At cluster scale the same interface maps onto catalog tables
   *     (`saveAsTable` / `insertInto` with dynamic partition overwrite);
   *     nothing in SyncEngine assumes a local filesystem.
+  *
+  * Layout rule: how a table's rows are laid out on disk belongs to the
+  * table, as a MergeTree's `PARTITION BY` does in the reference. The
+  * store reads it back with [[TableStore.partitionColumns]], and the
+  * writes that keep a table (`append`, `replacePartitions`) follow it;
+  * no caller names partition columns for an existing table. `overwrite`
+  * replaces a table with a flat one. A [[ParquetTableStore]] table is
+  * partitioned when it was written with `overwritePartitioned`;
+  * [[CatalogTableStore]] never writes a partitioned table.
   */
 trait TableStore {
   def spark: SparkSession
   def exists(table: String): Boolean
   def read(table: String): DataFrame
   def overwrite(table: String, df: DataFrame): Unit
+  /** Adds `df`'s rows to `table`, creating it when it does not exist. */
   def append(table: String, df: DataFrame): Unit
   def drop(table: String): Unit
   /** `TRUNCATE TABLE` (S9). */
   def truncate(table: String): Unit
   def count(table: String): Long = if (exists(table)) read(table).count() else 0L
+  /** The `k=v` partition columns of `table`, outermost first; `Nil` for
+    * a flat or missing table. */
+  def partitionColumns(table: String): Seq[String] = Nil
+  /** Replaces the partitions of `table` that `touched` lists with `rows`:
+    * the partitions `rows` holds are overwritten, and the touched ones it
+    * does not hold are dropped. `touched` has one column per partition
+    * column and is read before anything is written. Every other
+    * partition's files stay as they are. On a flat table this is
+    * `overwrite(table, rows)` and `touched` is not evaluated. */
+  def replacePartitions(table: String, rows: DataFrame, touched: => DataFrame): Unit =
+    overwrite(table, rows)
   /** C10 `OPTIMIZE TABLE ... FINAL` analog: rewrite into k files
     * (`clickhouse/jdbsChSession.scala:387-398`). */
   def compact(table: String, targetFiles: Int): Unit =
@@ -147,43 +170,73 @@ final class ParquetTableStore(val spark: SparkSession, root: String)
       throw new RuntimeException(s"swap failed for $table")
   }
 
+  /** A missing table is created by [[overwrite]], so a first load of an
+    * untransformed scan copies its files; an existing one gets new part
+    * files in its own partition layout, where [[read]] finds them. */
   override def append(table: String, df: DataFrame): Unit =
-    df.write.mode(SaveMode.Append).parquet(dir(table).toString)
+    if (!exists(table)) overwrite(table, df)
+    else df.write.mode(SaveMode.Append).partitionBy(partitionColumns(table): _*)
+      .parquet(dir(table).toString)
 
   /** Initial load of a hive-partitioned table (one subdir per value of
-    * `partCols`). Partitioning is the unit of selective rewrite below. */
+    * `partCols`). Later writes keep the layout: appends land in it and
+    * [[replacePartitions]] rewrites only the partitions it touches. */
   def overwritePartitioned(table: String, df: DataFrame,
                            partCols: Seq[String]): Unit =
     stagedSwap(table)(df.write.mode(SaveMode.Overwrite)
       .partitionBy(partCols: _*).parquet(_))
 
-  /** Replace ONLY the partitions present in `df`, leaving every other
-    * partition's files untouched — Spark's dynamic partition overwrite
-    * on the path. This is what makes `update`/`append_where` a partial
-    * rewrite instead of a full-table rewrite at scale. */
-  def dynamicOverwrite(table: String, df: DataFrame,
-                       partCols: Seq[String]): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*)
-      .parquet(dir(table).toString)
-
-  /** Physically remove whole partitions (dynamic overwrite can only
-    * REPLACE partitions present in the written frame — a partition whose
-    * rows were all deleted produces no rows to write and must be dropped
-    * explicitly). Directory names go through Spark's own Hive path
-    * escaping (getPartitionPathString) so values with '/', ':' etc. and
-    * nulls (__HIVE_DEFAULT_PARTITION__) resolve to the real dirs. */
-  def dropPartitions(table: String, partCol: String, values: Seq[Any]): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+  /** Read from the directory names, as Spark's partition discovery reads
+    * them: the key of the first visible `k=v` directory at each level,
+    * unescaped. One listing per level on the driver, no Spark job. */
+  override def partitionColumns(table: String): Seq[String] = {
     val f = fs
-    values.foreach { v =>
-      val leaf = ExternalCatalogUtils.getPartitionPathString(
-        partCol, Option(v).map(_.toString).getOrElse(null))
-      val p = new Path(dir(table), leaf)
-      if (f.exists(p)) f.delete(p, true)
-    }
+    def below(d: Path): List[String] =
+      f.listStatus(d).find { s =>
+        val n = s.getPath.getName
+        s.isDirectory && !FooterBridge.isHidden(n) && n.contains("=")
+      } match {
+        case Some(s) => ExternalCatalogUtils.unescapePathName(
+          s.getPath.getName.takeWhile(_ != '=')) :: below(s.getPath)
+        case None => Nil
+      }
+    if (f.exists(dir(table))) below(dir(table)) else Nil
   }
+
+  /** Stages `rows` in a hidden table under the target, so the rewrite
+    * never scans the files it replaces, then collects the touched
+    * partitions the staged rows do not hold (before the target changes,
+    * since `touched` reads it). Spark's dynamic partition overwrite
+    * replaces only the partitions present in the staged rows; an emptied
+    * partition has no row to write, so its directory is deleted, named
+    * through Spark's own Hive path escaping (values with '/', ':' and
+    * nulls, `__HIVE_DEFAULT_PARTITION__`, resolve to the real dirs). */
+  override def replacePartitions(table: String, rows: DataFrame,
+                                 touched: => DataFrame): Unit =
+    partitionColumns(table) match {
+      case Nil => overwrite(table, rows)
+      case parts =>
+        val stagingT = s"$table.__staging"
+        overwrite(stagingT, rows)
+        val staged = read(stagingT)
+        val held = staged.select(parts.map(c => col(c).as("__held_" + c)): _*)
+          .distinct()
+        // null-safe: a null partition value is a partition too
+        val emptied = touched.toDF(parts: _*)
+          .join(held, parts.map(c => col(c) <=> col("__held_" + c)).reduce(_ && _),
+            "left_anti")
+          .select(parts.map(col(_).cast("string")): _*).collect()
+        staged.write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(parts: _*).parquet(dir(table).toString)
+        val f = fs
+        emptied.foreach { v =>
+          val p = new Path(dir(table), parts.indices.map(i => ExternalCatalogUtils
+            .getPartitionPathString(parts(i), v.getString(i))).mkString("/"))
+          if (f.exists(p)) f.delete(p, true)
+        }
+        drop(stagingT)
+    }
 
   override def drop(table: String): Unit = {
     val f = fs

@@ -1,17 +1,9 @@
 package graft.ops
 
 import graft.io.TableStore
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Executes one [[SyncOp]] against a target table — the Spark rewrite of
-  * the reference's per-table copy flows (`task/TaskLogic.scala:167-241`,
-  * `clickhouse/jdbsChSession.scala:222-414`; SURVEY.md §2.3 W1–W6).
-  *
-  * Every operation is single-pass over the source with at most one shuffle
-  * (the anti/merge join); nothing is ever collected to the driver. Scale
-  * notes per op inline.
-  */
 /** Per-table result accounting, mirroring the reference's audit columns
   * (`ora/jdbcSession.scala:592-615`): pre/post counts and the copied
   * delta (`clickhouse/jdbsChSession.scala:299-308`). */
@@ -20,6 +12,17 @@ final case class SyncResult(table: String, op: SyncOp,
   def rowsCopied: Long = rowsAfter - rowsBefore
 }
 
+/** Executes one [[SyncOp]] against a target table — the Spark rewrite of
+  * the reference's per-table copy flows (`task/TaskLogic.scala:167-241`,
+  * `clickhouse/jdbsChSession.scala:222-414`; SURVEY.md §2.3 W1–W6).
+  *
+  * Every operation is single-pass over the source with at most one shuffle
+  * (the anti/merge join); no row is collected to the driver. The target's
+  * layout is the store's ([[TableStore.partitionColumns]]): appends land
+  * in it, and `update`/`append_where` rewrite a flat target whole and a
+  * partitioned one only in the partitions they touch. Scale notes per op
+  * inline.
+  */
 final class SyncEngine(val store: TableStore) {
 
   private def targetOpt(table: String): Option[DataFrame] =
@@ -72,13 +75,19 @@ final class SyncEngine(val store: TableStore) {
     * source rows matching it — delete-first to eliminate duplicates
     * (`request/OperType.scala:16-26`, delete
     * `clickhouse/jdbsChSession.scala:222-236`). On immutable storage this
-    * is an overwrite of `target.filter(!p) ∪ source.filter(p)`; on a
-    * partitioned sink the same shape becomes `replaceWhere`/dynamic
-    * partition overwrite so only affected partitions rewrite at scale. */
+    * is a rewrite of `scope.filter(!p) ∪ source.filter(p)`, the
+    * `replaceWhere` shape. The scope is the whole table when the target
+    * is flat; on a partitioned target it is the partitions owning a
+    * deleted or an inserted row, so only those rewrite (the reference's
+    * `DELETE … WHERE` follows the MergeTree's own `PARTITION BY` the same
+    * way). */
   def appendWhere(spec: TableSpec, src: DataFrame): SyncResult = {
     val t    = spec.fullName
     val pred = expr(spec.whereFilter.getOrElse(
       throw InvalidTableSpec("append_where requires where_filter")))
+    // NULL-safe: rows where pred is false OR NULL are kept, exactly like
+    // SQL DELETE WHERE pred (deletes only pred=TRUE rows).
+    val deleted = coalesce(pred, lit(false))
     val incoming = prepareSource(src, spec)
     targetOpt(t) match {
       case None =>
@@ -86,13 +95,24 @@ final class SyncEngine(val store: TableStore) {
         SyncResult(t, SyncOp.AppendWhere, 0L, store.count(t))
       case Some(target) =>
         val before = store.count(t)
-        // NULL-safe keep: rows where pred is false OR NULL are kept, exactly
-        // like SQL DELETE WHERE pred (deletes only pred=TRUE rows).
-        val kept = target.filter(!coalesce(pred, lit(false)))
-        store.overwrite(t, kept.unionByName(incoming))
+        val parts = store.partitionColumns(t)
+        lazy val touched = target.filter(deleted).select(parts.map(col): _*)
+          .union(incoming.select(parts.map(col): _*)).distinct()
+        val kept = scope(target, parts, touched).filter(!deleted)
+        store.replacePartitions(t, kept.unionByName(incoming), touched)
         SyncResult(t, SyncOp.AppendWhere, before, store.count(t))
     }
   }
+
+  /** The target rows an operation rewrites: all of them on a flat table
+    * (`touched` is not built), those of the `touched` partitions on a
+    * partitioned one: a broadcast semi-join on the partition columns,
+    * null-safe because a null value is a partition too. */
+  private def scope(target: DataFrame, parts: Seq[String],
+                    touched: => DataFrame): DataFrame =
+    if (parts.isEmpty) target
+    else target.join(broadcast(touched.toDF(parts.map("__touched_" + _): _*)),
+      parts.map(c => col(c) <=> col("__touched_" + c)).reduce(_ && _), "left_semi")
 
   /** W3 `append_bymax`: watermark incremental
     * (`request/OperType.scala:38-46`; probe
@@ -107,7 +127,7 @@ final class SyncEngine(val store: TableStore) {
     val wm = Watermark.maxValAndCnt(targetOpt(t), sc)
     val delta = prepareSource(src, spec)
       .filter(Watermark.watermarkPredicate(sc, wm))
-    if (store.exists(t)) store.append(t, delta) else store.overwrite(t, delta)
+    store.append(t, delta)
     SyncResult(t, SyncOp.AppendByMax, wm.cntRows, store.count(t))
   }
 
@@ -129,8 +149,10 @@ final class SyncEngine(val store: TableStore) {
         SyncResult(t, SyncOp.AppendNotIn, 0L, store.count(t))
       case Some(target) =>
         val before = store.count(t)
+        // a USING join puts the keys first: keep the source's column order
         val fresh  = incoming.join(
           Watermark.keySet(target, keys), keys, "left_anti")
+          .select(incoming.columns.map(col).toIndexedSeq: _*)
         store.append(t, fresh)
         SyncResult(t, SyncOp.AppendNotIn, before, store.count(t))
     }
@@ -152,23 +174,28 @@ final class SyncEngine(val store: TableStore) {
     * the target's max feed the merge (`clickhouse/jdbsChSession.scala:
     * 103-106`).
     *
-    * Scale: broadcast when the update set is small (hinted); else Catalyst
-    * falls back to a shuffled hash/SMJ on the PK. The full-table rewrite is
-    * the unavoidable cost of immutable storage — on a partitioned target
-    * this becomes a rewrite of only the partitions containing matched PKs.
+    * Scale: the update set is broadcast (hinted); the rewrite is the
+    * unavoidable cost of immutable storage. Its scope is the whole table
+    * when the target is flat; on a partitioned target only the
+    * partitions containing matched PKs are merged and rewritten
+    * (SURVEY.md §7.4 "ALTER TABLE UPDATE on immutable storage"), and
+    * the other partitions' files are never touched.
     */
   def update(spec: TableSpec, updatesSrc: DataFrame,
-             pkColumns: Seq[String],
-             broadcastUpdates: Boolean = true): SyncResult = {
+             pkColumns: Seq[String]): SyncResult = {
     val t = spec.fullName
     require(pkColumns.nonEmpty, s"$t: update requires a primary key")
     val target = targetOpt(t).getOrElse(
       throw InvalidTableSpec(s"$t: update target does not exist"))
     val before = store.count(t)
     val (feed, updCols) = updateFeed(spec, target, updatesSrc, pkColumns)
-    val merged = mergeUpdates(target, target, feed, pkColumns, updCols,
-      broadcastUpdates)
-    store.overwrite(t, merged)
+    val parts = store.partitionColumns(t)
+    lazy val touched = target
+      .join(feed.select(pkColumns.map(col): _*).distinct(), pkColumns, "left_semi")
+      .select(parts.map(col): _*).distinct()
+    val merged = mergeUpdates(target, scope(target, parts, touched), feed,
+      pkColumns, updCols)
+    store.replacePartitions(t, merged, touched)
     SyncResult(t, SyncOp.Update, before, store.count(t))
   }
 
@@ -212,17 +239,14 @@ final class SyncEngine(val store: TableStore) {
     (feed, updCols)
   }
 
-  /** Left-join merge of the prepared feed into `base`, preserving the
-    * column order of `shape`. */
+  /** Left-join merge of the prepared feed, broadcast, into `base`,
+    * preserving the column order of `shape`. */
   private def mergeUpdates(shape: DataFrame, base: DataFrame, feed: DataFrame,
-                           pkColumns: Seq[String], updCols: Seq[String],
-                           broadcastUpdates: Boolean): DataFrame = {
+                           pkColumns: Seq[String], updCols: Seq[String]): DataFrame = {
     val updAliased = updCols.foldLeft(feed) { (d, c) =>
       d.withColumnRenamed(c, s"__upd_$c")
     }
-    val joined = base.join(
-      if (broadcastUpdates) broadcast(updAliased) else updAliased,
-      pkColumns, "left")
+    val joined = base.join(broadcast(updAliased), pkColumns, "left")
     shape.columns.foldLeft(joined) { (d, c) =>
       if (updCols.contains(c))
         d.withColumn(c,
@@ -232,86 +256,14 @@ final class SyncEngine(val store: TableStore) {
     }.select(shape.columns.map(col).toIndexedSeq: _*)
   }
 
-  /** W5 on a hive-partitioned target: rewrite ONLY the partitions that
-    * contain matched PKs — the at-scale form of [[update]] (SURVEY.md
-    * §7.4 "ALTER TABLE UPDATE on immutable storage"). Requires a
-    * [[graft.io.ParquetTableStore]] target written with
-    * `overwritePartitioned`.
-    *
-    * Flow: ① semi-join finds the affected partition values (small —
-    * bounded by partition count); ② only those partitions are read and
-    * merged (partition pruning on the scan); ③ the merged slice lands
-    * via dynamic partition overwrite, staged through a temp table first
-    * so the write never scans the files it replaces. Untouched
-    * partitions' files are never rewritten (asserted by mtime in specs).
-    */
-  def updatePartitioned(spec: TableSpec, updatesSrc: DataFrame,
-                        pkColumns: Seq[String], partCol: String): SyncResult = {
-    val t = spec.fullName
-    val pstore = store.asInstanceOf[graft.io.ParquetTableStore]
-    val target = store.read(t)
-    val before = store.count(t)
-    // identical semantics to update(): W6 watermark + dictionary dedup +
-    // matched-flag merge — only the rewrite scope differs
-    val (feed, updCols) = updateFeed(spec, target, updatesSrc, pkColumns)
-    val affected = target
-      .join(feed.select(pkColumns.map(col): _*).distinct(), pkColumns, "left_semi")
-      .select(partCol).distinct()
-    val slice = target.join(broadcast(affected), Seq(partCol), "left_semi")
-    val merged = mergeUpdates(target, slice, feed, pkColumns, updCols,
-      broadcastUpdates = true)
-    // stage the merged slice, then dynamic-overwrite only its partitions
-    val stagingT = s"$t.__upd_staging"
-    store.overwrite(stagingT, merged)
-    pstore.dynamicOverwrite(t, store.read(stagingT), Seq(partCol))
-    store.drop(stagingT)
-    SyncResult(t, SyncOp.Update, before, store.count(t))
-  }
-
-  /** W2 on a hive-partitioned target: the `replaceWhere` shape — only
-    * partitions owning deleted or inserted rows rewrite. Affected set =
-    * partitions of target rows matching the filter ∪ partitions of the
-    * incoming rows. */
-  def appendWherePartitioned(spec: TableSpec, src: DataFrame,
-                             partCol: String): SyncResult = {
-    val t = spec.fullName
-    val pstore = store.asInstanceOf[graft.io.ParquetTableStore]
-    val pred = expr(spec.whereFilter.getOrElse(
-      throw InvalidTableSpec("append_where requires where_filter")))
-    val incoming = prepareSource(src, spec).filter(pred)
-    val target = store.read(t)
-    val before = store.count(t)
-    val affected = target.filter(coalesce(pred, lit(false))).select(partCol)
-      .union(incoming.select(partCol)).distinct()
-    val slice = target.join(broadcast(affected), Seq(partCol), "left_semi")
-    val newSlice = slice.filter(!coalesce(pred, lit(false)))
-      .unionByName(incoming)
-    val stagingT = s"$t.__aw_staging"
-    store.overwrite(stagingT, newSlice)
-    val staged = store.read(stagingT)
-    // dynamic overwrite only REPLACES partitions present in the written
-    // frame — an affected partition whose rows were ALL deleted (and got
-    // no incoming rows) writes nothing and must be dropped explicitly,
-    // or the deleted rows would silently survive. Collected BEFORE the
-    // overwrite: `affected` scans the pre-overwrite target listing, which
-    // the overwrite invalidates.
-    val emptied = affected.join(staged.select(partCol).distinct(),
-        Seq(partCol), "left_anti")
-      .collect().map(_.get(0)).toSeq
-    pstore.dynamicOverwrite(t, staged, Seq(partCol))
-    pstore.dropPartitions(t, partCol, emptied)
-    store.drop(stagingT)
-    SyncResult(t, SyncOp.AppendWhere, before, store.count(t))
-  }
-
-  /** Dispatch one spec (update ops need the pk + updates feed → use
-    * [[update]] directly; `run` covers the non-update wave). */
-  def run(spec: TableSpec, src: DataFrame): SyncResult = spec.operation match {
+  /** Dispatch one spec; `pkColumns` is the primary key an update merges
+    * on (the other operations ignore it). */
+  def run(spec: TableSpec, src: DataFrame,
+          pkColumns: Seq[String] = Nil): SyncResult = spec.operation match {
     case SyncOp.Recreate    => recreate(spec, src)
     case SyncOp.AppendWhere => appendWhere(spec, src)
     case SyncOp.AppendByMax => appendByMax(spec, src)
     case SyncOp.AppendNotIn => appendNotIn(spec, src)
-    case SyncOp.Update =>
-      throw InvalidTableSpec("update needs pkColumns: call update() directly")
+    case SyncOp.Update      => update(spec, src, pkColumns)
   }
 }

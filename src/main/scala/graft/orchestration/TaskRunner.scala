@@ -1,7 +1,7 @@
 package graft.orchestration
 
 import graft.audit.{AuditSink, EngineState, TableAudit}
-import graft.ops.{SyncEngine, SyncOp, TableSpec, TaskSpec}
+import graft.ops.{SyncEngine, TableSpec, TaskSpec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.time.Instant
@@ -43,14 +43,12 @@ final class TaskRunner(
 
   /** sources: table fullName → source DataFrame provider;
     * pkColumns: for update-wave tables (reference reads PK from
-    * `system.tables.primary_key`, `clickhouse/jdbsChSession.scala:185-201`);
-    * partitionCols: tables listed here use the partition-pruned variants
-    * (updatePartitioned / appendWherePartitioned) — only affected
-    * partitions rewrite. */
+    * `system.tables.primary_key`, `clickhouse/jdbsChSession.scala:185-201`).
+    * How much of a target a write rewrites follows the target's own
+    * layout in the store (see [[SyncEngine]]). */
   def run(task: TaskSpec,
           sources: String => DataFrame,
           pkColumns: Map[String, Seq[String]] = Map.empty,
-          partitionCols: Map[String, String] = Map.empty,
           onAdmitted: Long => Unit = _ => ()): Long = {
     if (!state.compareAndSet(EngineState.Wait, EngineState.Executing))
       throw RejectedException(s"task rejected: engine state = ${state.get()}")
@@ -64,8 +62,8 @@ final class TaskRunner(
       // shell's fire-and-forget taskid reply, WServer.scala:105-120) hook here
       onAdmitted(taskId)
       try {
-        runWave(taskId, task.nonUpdateWave, task.degree, sources, pkColumns, partitionCols)
-        runWave(taskId, task.updateWave, task.degree, sources, pkColumns, partitionCols)
+        runWave(taskId, task.nonUpdateWave, task.degree, sources, pkColumns)
+        runWave(taskId, task.updateWave, task.degree, sources, pkColumns)
         audit.taskEvent(taskId, "finished")
         taskId
       } catch {
@@ -81,10 +79,9 @@ final class TaskRunner(
 
   private def runWave(taskId: Long, wave: Seq[TableSpec], degree: Int,
                       sources: String => DataFrame,
-                      pkColumns: Map[String, Seq[String]],
-                      partitionCols: Map[String, String]): Unit = {
+                      pkColumns: Map[String, Seq[String]]): Unit = {
     if (wave.isEmpty) return
-    if (degree <= 3) wave.foreach(t => copyOne(taskId, t, sources, pkColumns, partitionCols))
+    if (degree <= 3) wave.foreach(t => copyOne(taskId, t, sources, pkColumns))
     else {
       val par = degree - 1
       val pool = Executors.newFixedThreadPool(par)
@@ -94,7 +91,7 @@ final class TaskRunner(
           Future {
             // FAIR pool: concurrent table copies share the cluster fairly
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", "graft-task")
-            copyOne(taskId, t, sources, pkColumns, partitionCols)
+            copyOne(taskId, t, sources, pkColumns)
           }
         }
         val failures = futs.map(f => Try(Await.result(f, Duration.Inf)))
@@ -106,8 +103,7 @@ final class TaskRunner(
 
   private def copyOne(taskId: Long, spec: TableSpec,
                       sources: String => DataFrame,
-                      pkColumns: Map[String, Seq[String]],
-                      partitionCols: Map[String, String]): Unit = {
+                      pkColumns: Map[String, Seq[String]]): Unit = {
     val t0 = System.nanoTime()
     audit.tableEvent(TableAudit(taskId, spec.fullName, spec.operation.operStr,
       "begin", 0, 0, None, Instant.now()))
@@ -127,17 +123,8 @@ final class TaskRunner(
         spec.operation.operStr, "copying", rows, rows / secs, None, Instant.now()))
     }, heartbeat.toMillis, heartbeat.toMillis, TimeUnit.MILLISECONDS)
     try {
-      val partCol = partitionCols.get(spec.fullName)
-      val res = (spec.operation, partCol) match {
-        case (SyncOp.Update, Some(pc)) =>
-          engine.updatePartitioned(spec, sources(spec.fullName),
-            requirePk(spec, pkColumns), pc)
-        case (SyncOp.Update, None) =>
-          engine.update(spec, sources(spec.fullName), requirePk(spec, pkColumns))
-        case (SyncOp.AppendWhere, Some(pc)) =>
-          engine.appendWherePartitioned(spec, sources(spec.fullName), pc)
-        case _ => engine.run(spec, sources(spec.fullName))
-      }
+      val res = engine.run(spec, sources(spec.fullName),
+        pkColumns.getOrElse(spec.fullName, Nil))
       copied.set(res.rowsCopied)
       val secs = math.max(1L, (System.nanoTime() - t0) / 1000000000L)
       audit.tableEvent(TableAudit(taskId, spec.fullName, spec.operation.operStr,
@@ -151,10 +138,4 @@ final class TaskRunner(
         throw e
     } finally ticker.shutdownNow()
   }
-
-  private def requirePk(spec: TableSpec,
-                        pkColumns: Map[String, Seq[String]]): Seq[String] =
-    pkColumns.getOrElse(spec.fullName,
-      throw new IllegalArgumentException(
-        s"${spec.fullName}: no primary key registered for update"))
 }

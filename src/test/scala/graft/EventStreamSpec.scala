@@ -226,8 +226,7 @@ class EventStreamSpec extends SparkTestBase {
     EventStream.runStreamForeachBatch(spark, dir, { (batch, _) =>
       val novel = graft.llm.Dedup.updateExactIndex(store, "dd",
         batch, "doc_id", "text")
-      if (store.exists("dd.novel")) store.append("dd.novel", novel)
-      else store.overwrite("dd.novel", novel)
+      store.append("dd.novel", novel)
     }, options = Map("maxFilesPerTrigger" -> "1"))
     val got = store.read("dd.novel")
       .select("doc_id", "text").as[(Long, String)].collect().toSet
@@ -256,8 +255,7 @@ class EventStreamSpec extends SparkTestBase {
     EventStream.runStreamForeachBatch(spark, qdir, { (batch, _) =>
       val res = graft.llm.Similarity.sqTopKIndexed(store, "sq",
         batch, "vec_id", "embedding", k = 5)
-      if (store.exists("sq.results")) store.append("sq.results", res)
-      else store.overwrite("sq.results", res)
+      store.append("sq.results", res)
     }, options = Map("maxFilesPerTrigger" -> "1"))
     val streamed = store.read("sq.results")
       .select($"query_id", $"cand_id", $"rnk")

@@ -3,24 +3,12 @@ package graft
 import graft.io.ParquetTableStore
 import graft.ops._
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
+import PartitionLayoutSpec.partMtimes
 
+/** `update` and `append_where` on a hive-partitioned target rewrite only
+  * the partitions they touch; the store reads the layout from the table. */
 class PartitionedUpdateSpec extends SparkTestBase {
   import spark.implicits._
-
-  /** newest parquet mtime per partition dir. */
-  private def partMtimes(root: String, table: String): Map[String, Long] = {
-    val base = Paths.get(root, table.split('.').toSeq: _*)
-    Files.list(base).iterator().asScala
-      .filter(p => Files.isDirectory(p) && p.getFileName.toString.contains("="))
-      .map { p =>
-        val newest = Files.walk(p).iterator().asScala
-          .filter(_.toString.endsWith(".parquet"))
-          .map(f => Files.getLastModifiedTime(f).toMillis).max
-        p.getFileName.toString -> newest
-      }.toMap
-  }
 
   test("partitioned update rewrites ONLY affected partitions (file mtimes prove it)") {
     val root = tmpDir("pupd")
@@ -39,7 +27,7 @@ class PartitionedUpdateSpec extends SparkTestBase {
       .toDF("id", "name")
     val spec = TableSpec(SyncOp.Update, "db", "t",
       updateFields = Some(Seq("name"))).validate()
-    val r = eng.updatePartitioned(spec, updates, Seq("id"), "bucket")
+    val r = eng.update(spec, updates, Seq("id"))
     assert(r.rowsBefore == 1000 && r.rowsAfter == 1000)
 
     val m1 = partMtimes(root, "db.t")
@@ -68,7 +56,7 @@ class PartitionedUpdateSpec extends SparkTestBase {
       whereFilter = Some("bucket = 4")).validate()
     val incoming = Seq((4L, "FRESH4", 4L), (1004L, "NEW1004", 4L))
       .toDF("id", "payload", "bucket")
-    val r = eng.appendWherePartitioned(spec, incoming, "bucket")
+    val r = eng.appendWhere(spec, incoming)
     val changed = partMtimes(root, "db.t").filter { case (k, v) => v != m0(k) }.keySet
     assert(changed == Set("bucket=4"), s"got $changed")
     // delete-first semantics: old bucket-4 rows gone, fresh ones present
@@ -87,9 +75,9 @@ class PartitionedUpdateSpec extends SparkTestBase {
     // filter deletes ALL of bucket 2; incoming has nothing for bucket 2
     val spec = TableSpec(SyncOp.AppendWhere, "db", "t",
       whereFilter = Some("bucket = 2")).validate()
-    val r = eng.appendWherePartitioned(spec,
+    val r = eng.appendWhere(spec,
       spark.emptyDataFrame.select(lit(0L).as("id"), lit("").as("payload"),
-        lit(0L).as("bucket")).limit(0), "bucket")
+        lit(0L).as("bucket")).limit(0))
     assert(store.read("db.t").filter($"bucket" === 2).count() == 0,
       "deleted rows must not survive")
     assert(r.rowsAfter == 80)
@@ -110,7 +98,7 @@ class PartitionedUpdateSpec extends SparkTestBase {
     // id=2: candidate BELOW target max(ver)=20 — filtered by W6
     val updates = Seq((1L, "OLD", 21L), (1L, "NEW", 25L), (2L, "STALE", 15L))
       .toDF("id", "name", "ver")
-    eng.updatePartitioned(spec, updates, Seq("id"), "bucket")
+    eng.update(spec, updates, Seq("id"))
     val got = store.read("db.t").select("id", "name")
       .as[(Long, String)].collect().toMap
     assert(got == Map(1L -> "NEW", 2L -> "b"))
@@ -126,8 +114,8 @@ class PartitionedUpdateSpec extends SparkTestBase {
         .toDF("id", "payload", "slice"), Seq("slice"))
     val spec = TableSpec(SyncOp.AppendWhere, "db", "t",
       whereFilter = Some("slice = '2024/01'")).validate()
-    eng.appendWherePartitioned(spec,
-      Seq.empty[(Long, String, String)].toDF("id", "payload", "slice"), "slice")
+    eng.appendWhere(spec,
+      Seq.empty[(Long, String, String)].toDF("id", "payload", "slice"))
     assert(store.read("db.t").count() == 2, "escaped partition must be dropped")
     assert(store.read("db.t").filter($"slice" === "2024/02").count() == 2)
   }
@@ -143,8 +131,8 @@ class PartitionedUpdateSpec extends SparkTestBase {
     Thread.sleep(1100)
     val spec = TableSpec(SyncOp.Update, "db", "t",
       updateFields = Some(Seq("name"))).validate()
-    eng.updatePartitioned(spec,
-      Seq((9999L, "ghost")).toDF("id", "name"), Seq("id"), "bucket")
+    eng.update(spec,
+      Seq((9999L, "ghost")).toDF("id", "name"), Seq("id"))
     assert(partMtimes(root, "db.t") == m0)
     assert(store.count("db.t") == 100)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.io.ParquetTableStore
+import graft.io.{ParquetMeta, ParquetTableStore}
 import graft.ops._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -140,6 +140,14 @@ class SyncEngineSpec extends SparkTestBase {
       src((1, "dup", 1), (2, "newver", 3), (9, "new", 9)))
     assert(r2.rowsCopied == 0)   // convergence
     assert(store.read("db.t").count() == 4)
+    // appended files keep the table's column order, so a positional read
+    // holds whichever footer the read schema comes from
+    assert(store.read("db.t").as[(Long, String, Long)].collect().toSet ==
+      Set((1L, "a", 1L), (2L, "b", 2L), (2L, "newver", 3L), (9L, "new", 9L)))
+    store.read("db.t").inputFiles.foreach { f =>
+      assert(ParquetMeta.schema(spark, f).fieldNames.toSeq ==
+        Seq("id", "name", "ver"), f)
+    }
   }
 
   test("W4 append_notin: duplicate target keys, same rows, fewer jobs than distinct keys") {

@@ -77,18 +77,26 @@ class TaskRunnerSpec extends SparkTestBase {
     runner.run(TaskSpec(Seq(TableSpec(SyncOp.Recreate, "db", "ok"))), _ => src(1))
   }
 
-  test("partitionCols routes update/append_where to the partition-pruned variants") {
-    val (store, audit, runner) = fixture()
+  test("an update task on a partitioned target rewrites only the affected partition") {
+    val root = tmpDir("task-part")
+    val store = new ParquetTableStore(spark, root)
+    val audit = new InMemoryAuditSink
+    val runner = new TaskRunner(spark, new SyncEngine(store), audit,
+      heartbeat = 100.millis)
     store.overwritePartitioned("db.pt",
       (1L to 100L).map(i => (i, s"n$i", i % 5)).toDF("id", "name", "bucket"),
       Seq("bucket"))
+    val m0 = PartitionLayoutSpec.partMtimes(root, "db.pt")
+    Thread.sleep(1100)   // mtime resolution guard
     val task = TaskSpec(Seq(
       TableSpec(SyncOp.Update, "db", "pt", updateFields = Some(Seq("name")))),
       degree = 2)
     runner.run(task,
       _ => Seq((7L, "UPD7", 2L)).toDF("id", "name", "bucket"),
-      pkColumns = Map("db.pt" -> Seq("id")),
-      partitionCols = Map("db.pt" -> "bucket"))
+      pkColumns = Map("db.pt" -> Seq("id")))
+    val m1 = PartitionLayoutSpec.partMtimes(root, "db.pt")
+    assert(m1.keySet == m0.keySet)
+    assert(m1.filter { case (k, v) => v != m0(k) }.keySet == Set("bucket=2"))
     assert(store.read("db.pt").filter($"id" === 7L)
       .select("name").as[String].head() == "UPD7")
     assert(store.count("db.pt") == 100)
