@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{FooterBridge, ParquetFileFormat}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Target-table storage abstraction.
@@ -59,13 +58,15 @@ trait TableStore {
   /** The `k=v` partition columns of `table`, outermost first; `Nil` for
     * a flat or missing table. */
   def partitionColumns(table: String): Seq[String] = Nil
-  /** Replaces the partitions of `table` that `touched` lists with `rows`:
-    * the partitions `rows` holds are overwritten, and the touched ones it
-    * does not hold are dropped. `touched` has one column per partition
-    * column and is read before anything is written. Every other
-    * partition's files stay as they are. On a flat table this is
-    * `overwrite(table, rows)` and `touched` is not evaluated. */
-  def replacePartitions(table: String, rows: DataFrame, touched: => DataFrame): Unit =
+  /** Rewrites the `touched` partitions of `table`: afterwards each holds
+    * the rows of `rows` that fall in it, and one that `rows` holds none of
+    * is gone. A row of `rows` in a partition outside `touched` is added to
+    * that partition, whose rows stay. Every other partition's files stay
+    * as they are. `touched` lists one partition per entry, its values in
+    * [[partitionColumns]] order, each as Spark casts it to a string (null
+    * for null). On a flat table this is `overwrite(table, rows)`. */
+  def replacePartitions(table: String, rows: DataFrame,
+                        touched: Seq[Seq[String]]): Unit =
     overwrite(table, rows)
   /** C10 `OPTIMIZE TABLE ... FINAL` analog: rewrite into k files
     * (`clickhouse/jdbsChSession.scala:387-398`). */
@@ -154,21 +155,27 @@ final class ParquetTableStore(val spark: SparkSession, root: String)
   }
 
   /** Write `table`'s new contents to a sibling staging dir with
-    * `write`, then swap it in for the old dir. A failed write leaves the
+    * `write`, then hand the dir to `install`. A failed write leaves the
     * old dir as it was and removes its staging dir (a failed Spark job's
     * straggling tasks may still write into it after the removal). */
-  private def stagedSwap(table: String)(write: String => Unit): Unit = {
-    val target  = dir(table)
+  private def staged(table: String)(write: String => Unit)(install: Path => Unit): Unit = {
     val staging = new Path(root,
       s".staging-${table.replace('.', '_')}-${System.nanoTime()}")
-    val f = fs
     try write(staging.toString)
-    catch { case e: Throwable => f.delete(staging, true); throw e }
-    if (f.exists(target)) f.delete(target, true)
-    f.mkdirs(target.getParent)
-    if (!f.rename(staging, target))
-      throw new RuntimeException(s"swap failed for $table")
+    catch { case e: Throwable => fs.delete(staging, true); throw e }
+    install(staging)
   }
+
+  /** [[staged]], then swap the staging dir in for the old dir. */
+  private def stagedSwap(table: String)(write: String => Unit): Unit =
+    staged(table)(write) { staging =>
+      val target = dir(table)
+      val f = fs
+      if (f.exists(target)) f.delete(target, true)
+      f.mkdirs(target.getParent)
+      if (!f.rename(staging, target))
+        throw new RuntimeException(s"swap failed for $table")
+    }
 
   /** A missing table is created by [[overwrite]], so a first load of an
     * untransformed scan copies its files; an existing one gets new part
@@ -203,39 +210,36 @@ final class ParquetTableStore(val spark: SparkSession, root: String)
     if (f.exists(dir(table))) below(dir(table)) else Nil
   }
 
-  /** Stages `rows` in a hidden table under the target, so the rewrite
-    * never scans the files it replaces, then collects the touched
-    * partitions the staged rows do not hold (before the target changes,
-    * since `touched` reads it). Spark's dynamic partition overwrite
-    * replaces only the partitions present in the staged rows; an emptied
-    * partition has no row to write, so its directory is deleted, named
-    * through Spark's own Hive path escaping (values with '/', ':' and
-    * nulls, `__HIVE_DEFAULT_PARTITION__`, resolve to the real dirs). */
+  /** Writes `rows` in the table's layout to a staging dir, so the
+    * rewrite never scans the files it replaces; then, on the driver,
+    * deletes the touched partition dirs and moves each staged partition's
+    * files into the table: one Spark job. The touched values name their
+    * dirs through Spark's own Hive path escaping (values with '/', ':',
+    * and nulls as `__HIVE_DEFAULT_PARTITION__`), as the writer names the
+    * staged ones. */
   override def replacePartitions(table: String, rows: DataFrame,
-                                 touched: => DataFrame): Unit =
+                                 touched: Seq[Seq[String]]): Unit =
     partitionColumns(table) match {
       case Nil => overwrite(table, rows)
       case parts =>
-        val stagingT = s"$table.__staging"
-        overwrite(stagingT, rows)
-        val staged = read(stagingT)
-        val held = staged.select(parts.map(c => col(c).as("__held_" + c)): _*)
-          .distinct()
-        // null-safe: a null partition value is a partition too
-        val emptied = touched.toDF(parts: _*)
-          .join(held, parts.map(c => col(c) <=> col("__held_" + c)).reduce(_ && _),
-            "left_anti")
-          .select(parts.map(col(_).cast("string")): _*).collect()
-        staged.write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(parts: _*).parquet(dir(table).toString)
-        val f = fs
-        emptied.foreach { v =>
-          val p = new Path(dir(table), parts.indices.map(i => ExternalCatalogUtils
-            .getPartitionPathString(parts(i), v.getString(i))).mkString("/"))
-          if (f.exists(p)) f.delete(p, true)
+        staged(table)(rows.write.partitionBy(parts: _*).parquet(_)) { staging =>
+          val f = fs
+          touched.foreach { v =>
+            val p = new Path(dir(table), parts.zip(v).map { case (c, s) =>
+              ExternalCatalogUtils.getPartitionPathString(c, s) }.mkString("/"))
+            if (f.exists(p)) f.delete(p, true)
+          }
+          val base = f.makeQualified(staging).toString
+          val files = f.listFiles(staging, true)
+          while (files.hasNext) {
+            val from = files.next().getPath
+            val to = new Path(dir(table), from.toString.stripPrefix(base + "/"))
+            if (!FooterBridge.isHidden(from.getName) &&
+                !(f.mkdirs(to.getParent) && f.rename(from, to)))
+              throw new java.io.IOException(s"move of $from to $to failed")
+          }
+          f.delete(staging, true)
         }
-        drop(stagingT)
     }
 
   override def drop(table: String): Unit = {

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.io.TableStore
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Per-table result accounting, mirroring the reference's audit columns
@@ -17,7 +17,8 @@ final case class SyncResult(table: String, op: SyncOp,
   * `clickhouse/jdbsChSession.scala:222-414`; SURVEY.md §2.3 W1–W6).
   *
   * Every operation is single-pass over the source with at most one shuffle
-  * (the anti/merge join); no row is collected to the driver. The target's
+  * (the anti/merge join); no row is collected to the driver, only the
+  * values of the partitions a partitioned rewrite touches. The target's
   * layout is the store's ([[TableStore.partitionColumns]]): appends land
   * in it, and `update`/`append_where` rewrite a flat target whole and a
   * partitioned one only in the partitions they touch. Scale notes per op
@@ -96,23 +97,34 @@ final class SyncEngine(val store: TableStore) {
       case Some(target) =>
         val before = store.count(t)
         val parts = store.partitionColumns(t)
-        lazy val touched = target.filter(deleted).select(parts.map(col): _*)
-          .union(incoming.select(parts.map(col): _*)).distinct()
+        val touched = partitionsOf(parts, target.filter(deleted), incoming)
         val kept = scope(target, parts, touched).filter(!deleted)
         store.replacePartitions(t, kept.unionByName(incoming), touched)
         SyncResult(t, SyncOp.AppendWhere, before, store.count(t))
     }
   }
 
-  /** The target rows an operation rewrites: all of them on a flat table
-    * (`touched` is not built), those of the `touched` partitions on a
-    * partitioned one: a broadcast semi-join on the partition columns,
-    * null-safe because a null value is a partition too. */
+  /** The partitions on `parts` that `frames` hold, collected once on the
+    * driver in the form [[TableStore.replacePartitions]] takes (bounded by
+    * the partition count); `Nil`, with no job, on a flat table. */
+  private def partitionsOf(parts: Seq[String], frames: DataFrame*): Seq[Seq[String]] =
+    if (parts.isEmpty) Nil
+    else frames.map(_.select(parts.map(col(_).cast("string")): _*))
+      .reduce(_ union _).distinct().collect()
+      .map(r => parts.indices.map(r.getString)).toSeq
+
+  /** The target rows an operation rewrites: all of them on a flat table,
+    * those of the `touched` partitions on a partitioned one, a filter on
+    * the partition columns alone, so the scan reads only those partitions'
+    * files. Struct equality matches null fields, as a null value is a
+    * partition too. */
   private def scope(target: DataFrame, parts: Seq[String],
-                    touched: => DataFrame): DataFrame =
+                    touched: Seq[Seq[String]]): DataFrame = {
+    def key(cs: Seq[Column]) =
+      struct(parts.zip(cs).map { case (p, c) => c.cast("string").as(p) }: _*)
     if (parts.isEmpty) target
-    else target.join(broadcast(touched.toDF(parts.map("__touched_" + _): _*)),
-      parts.map(c => col(c) <=> col("__touched_" + c)).reduce(_ && _), "left_semi")
+    else target.filter(key(parts.map(col)).isin(touched.map(v => key(v.map(lit))): _*))
+  }
 
   /** W3 `append_bymax`: watermark incremental
     * (`request/OperType.scala:38-46`; probe
@@ -179,7 +191,9 @@ final class SyncEngine(val store: TableStore) {
     * when the target is flat; on a partitioned target only the
     * partitions containing matched PKs are merged and rewritten
     * (SURVEY.md §7.4 "ALTER TABLE UPDATE on immutable storage"), and
-    * the other partitions' files are never touched.
+    * the other partitions' files are never touched, except that a row
+    * whose update moves it to another partition (an update_field that is
+    * a partition column) is added to that partition, whose rows stay.
     */
   def update(spec: TableSpec, updatesSrc: DataFrame,
              pkColumns: Seq[String]): SyncResult = {
@@ -190,9 +204,8 @@ final class SyncEngine(val store: TableStore) {
     val before = store.count(t)
     val (feed, updCols) = updateFeed(spec, target, updatesSrc, pkColumns)
     val parts = store.partitionColumns(t)
-    lazy val touched = target
-      .join(feed.select(pkColumns.map(col): _*).distinct(), pkColumns, "left_semi")
-      .select(parts.map(col): _*).distinct()
+    val touched = partitionsOf(parts,
+      target.join(feed.select(pkColumns.map(col): _*).distinct(), pkColumns, "left_semi"))
     val merged = mergeUpdates(target, scope(target, parts, touched), feed,
       pkColumns, updCols)
     store.replacePartitions(t, merged, touched)

@@ -99,6 +99,43 @@ class PartitionLayoutSpec extends SparkTestBase {
       Set((3L, 3), (7L, 2)))
   }
 
+  test("update of a partition column moves the row; its new partition keeps its rows") {
+    val (root, store, eng) = bucketed()
+    val m0 = partMtimes(root, "db.t")
+    Thread.sleep(1100)   // mtime resolution guard
+    // id 3 moves from bucket=3 to bucket=2, which no matched key lives in
+    eng.update(TableSpec(SyncOp.Update, "db", "t",
+        updateFields = Some(Seq("bucket"))).validate(),
+      Seq((3L, 2L)).toDF("id", "bucket"), Seq("id"))
+    assertOnlyPartitionDirs(root, "db.t")
+    assertCountsAgree(store, "db.t", 100)
+    val byBucket = store.read("db.t").groupBy("bucket").count()
+      .as[(Int, Long)].collect().toMap
+    assert(byBucket == Map(0 -> 20L, 1 -> 20L, 2 -> 21L, 3 -> 19L, 4 -> 20L))
+    assert(store.read("db.t").filter($"bucket" === 2)
+      .select("id").as[Long].collect().toSet ==
+      (2L to 97L by 5L).toSet + 3L)
+    val m1 = partMtimes(root, "db.t")
+    assert(m1.filter { case (k, v) => v != m0(k) }.keySet == Set("bucket=2", "bucket=3"))
+  }
+
+  test("replacePartitions: one Spark job, touched partitions replaced or dropped") {
+    val (root, store, _) = bucketed()
+    val m0 = partMtimes(root, "db.t")
+    Thread.sleep(1100)   // mtime resolution guard
+    val rows = Seq((1001L, "a", 1L), (1002L, "b", 1L)).toDF("id", "name", "bucket")
+    val (_, jobs) = JobProbe.jobs(spark)(
+      store.replacePartitions("db.t", rows, Seq(Seq("1"), Seq("4"))))
+    assert(jobs.size == 1, s"expected the staged write only: ${jobs.mkString(" | ")}")
+    assertOnlyPartitionDirs(root, "db.t")
+    assertCountsAgree(store, "db.t", 62)
+    assert(store.read("db.t").filter($"bucket" === 1)
+      .select("id").as[Long].collect().toSet == Set(1001L, 1002L))
+    val m1 = partMtimes(root, "db.t")
+    assert(m1.keySet == m0.keySet - "bucket=4")
+    assert(m1.filter { case (k, v) => v != m0(k) }.keySet == Set("bucket=1"))
+  }
+
   test("append_where with no partition argument keeps the layout") {
     val (root, store, eng) = bucketed()
     val spec = TableSpec(SyncOp.AppendWhere, "db", "t",
@@ -147,14 +184,20 @@ class PartitionLayoutSpec extends SparkTestBase {
     val store = new ParquetTableStore(spark, root)
     val eng = new SyncEngine(store)
     store.overwritePartitioned("db.t",
-      Seq((1L, "a", Some("x")), (2L, "b", None), (3L, "c", None))
+      Seq((1L, "a", Some("x")), (2L, "b", None), (3L, "c", None),
+          (4L, "d", Some("a/b:c")), (5L, "e", Some("a/b:c")))
         .toDF("id", "name", "slice"), Seq("slice"))
+    // the escaped value's dir ('/' and ':' are %-escaped) is found too
     eng.appendWhere(TableSpec(SyncOp.AppendWhere, "db", "t",
-        whereFilter = Some("id = 2")).validate(),
-      Seq((2L, "B", Option.empty[String])).toDF("id", "name", "slice"))
-    assert(store.read("db.t").select("id", "name").as[(Long, String)]
-      .collect().toSet == Set((1L, "a"), (2L, "B"), (3L, "c")))
+        whereFilter = Some("id = 2 OR id = 4")).validate(),
+      Seq((2L, "B", Option.empty[String]), (4L, "D", Some("a/b:c")))
+        .toDF("id", "name", "slice"))
+    assert(store.read("db.t").select("id", "name", "slice")
+      .as[(Long, String, Option[String])].collect().toSet ==
+      Set((1L, "a", Some("x")), (2L, "B", None), (3L, "c", None),
+        (4L, "D", Some("a/b:c")), (5L, "e", Some("a/b:c"))))
     assertOnlyPartitionDirs(root, "db.t")
+    assert(partMtimes(root, "db.t").size == 3)
   }
 
   test("append to a missing table creates it as overwrite does") {
