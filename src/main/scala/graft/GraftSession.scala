@@ -21,7 +21,22 @@ import org.apache.spark.sql.SparkSession
   * what it has compiled. The trade-off: the engine adds no per-session
   * artifacts (`addArtifact`, `addJar`, `addFile`), but a future caller
   * that does would share them with every other session. The setting
-  * binds only at session creation. */
+  * binds only at session creation.
+  *
+  * The `file:` FileSystem and FileContext are the engine's own
+  * (`graft.io.ForkFreeLocalFs`). Spark's jars ship without libhadoop, so
+  * Hadoop's stock local FS forks a `chmod` for every permission it sets
+  * and a `readlink` for every link check: 84 `chmod` and 104 `readlink`
+  * per pass of the q380 stream gate (its checkpoint renames), 110
+  * `chmod` per benchmark ETL cycle, each costing JVM and child CPU. The
+  * engine's classes answer both in-process, with the same results, and
+  * keep `.crc` checksums. Three writers go through them: the parquet
+  * table store, Spark's parquet committer, and the streaming checkpoint
+  * manager (FileContext). Caveat: Hadoop caches one `file:` FileSystem
+  * per JVM and user, whatever the conf. One created before the session
+  * (by a `FileSystem.get` under a plain `Configuration`) keeps the stock
+  * class for that JVM, and only FileContext, which builds its file
+  * system afresh from the conf, goes fork-free. */
 object GraftSession {
   def builder(cores: Int = Runtime.getRuntime.availableProcessors(),
               appName: String = "graft"): SparkSession.Builder =
@@ -43,6 +58,9 @@ object GraftSession {
       // compiled for one stream start is reused by the next (see above)
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
+      // in-process chmod and link checks for local files (see above)
+      .config("spark.hadoop.fs.file.impl", "graft.io.ForkFreeLocalFileSystem")
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.ForkFreeLocalFs")
 
   def local(cores: Int = 4, appName: String = "graft"): SparkSession = {
     val s = builder(cores, appName).getOrCreate()

@@ -230,9 +230,11 @@ final class ParquetTableStore(val spark: SparkSession, root: String)
             if (f.exists(p)) f.delete(p, true)
           }
           val base = f.makeQualified(staging).toString
-          val files = f.listFiles(staging, true)
-          while (files.hasNext) {
-            val from = files.next().getPath
+          // listStatus, not listFiles: a LocatedFileStatus reads each
+          // file's owner and permission, which the local FS forks `ls` for
+          def files(d: Path): Seq[Path] = f.listStatus(d).toSeq.flatMap(s =>
+            if (s.isDirectory) files(s.getPath) else Seq(s.getPath))
+          files(staging).foreach { from =>
             val to = new Path(dir(table), from.toString.stripPrefix(base + "/"))
             if (!FooterBridge.isHidden(from.getName) &&
                 !(f.mkdirs(to.getParent) && f.rename(from, to)))

@@ -10,6 +10,8 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.{HadoopFSUtils, ThreadUtils}
 
+import scala.concurrent.duration.Duration
+import scala.concurrent.{ExecutionContext, Future}
 import scala.jdk.CollectionConverters._
 
 /** Spark's own parquet footer and listing helpers, for driver-side
@@ -48,7 +50,7 @@ object FooterBridge {
     * whose footer cannot be read. */
   def readSchemas(spark: SparkSession, files: Seq[FileStatus],
                   conf: Configuration): Seq[Option[StructType]] =
-    ThreadUtils.parmap(files, "graft-footers", 8) { f =>
+    parmap(files) { f =>
       scala.util.Try(readSchema(spark, f, conf)).toOption.flatten
     }
 
@@ -56,8 +58,24 @@ object FooterBridge {
     * The footers are read with their row groups: Spark's
     * `readParquetFootersInParallel` skips them and would count 0. */
   def rowCount(files: Seq[FileStatus], conf: Configuration): Long =
-    ThreadUtils.parmap(files, "graft-footers", 8) { f =>
+    parmap(files) { f =>
       ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf), NO_FILTER)
         .getBlocks.asScala.map(_.getRowCount).sum
     }.sum
+
+  /** Eight daemon threads, all started on the first footer read and kept
+    * for the JVM's life. `ThreadUtils.parmap` started and stopped a pool
+    * of its own on every call. */
+  private lazy val footerPool: ExecutionContext = {
+    val pool = ThreadUtils.newDaemonFixedThreadPool(8, "graft-footers")
+    pool.prestartAllCoreThreads()
+    ExecutionContext.fromExecutorService(pool)
+  }
+
+  /** `ThreadUtils.parmap` on [[footerPool]]: `f` of each input, in input
+    * order; a failure is rethrown as `parmap` rethrows it. */
+  private def parmap[I, O](in: Seq[I])(f: I => O): Seq[O] = {
+    implicit val ec: ExecutionContext = footerPool
+    ThreadUtils.awaitResult(Future.traverse(in)(x => Future(f(x))), Duration.Inf)
+  }
 }

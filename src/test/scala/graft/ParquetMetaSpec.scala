@@ -157,4 +157,13 @@ class ParquetMetaSpec extends SparkTestBase {
     assert(jobs.isEmpty, s"metadata reads launched jobs: ${jobs.mkString(" | ")}")
     assert(counts == Seq(2L, 5L, spark.read.parquet(fixture("lineitem")).count()))
   }
+
+  test("footer reads share one thread pool: a second rowCount starts no thread") {
+    val p = tmpDir("pmeta-pool") + "/t"
+    rows(1 to 30).repartition(3).write.parquet(p)
+    assert(new File(p).list().count(_.endsWith(".parquet")) == 3)
+    assert(ParquetMeta.rowCount(spark, p) == 30L)
+    val started = JfrProbe.threadStarts(assert(ParquetMeta.rowCount(spark, p) == 30L))
+    assert(!started.exists(_.startsWith("graft-footers")), started)
+  }
 }
