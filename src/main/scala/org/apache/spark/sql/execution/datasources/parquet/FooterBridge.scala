@@ -64,8 +64,8 @@ object FooterBridge {
     }.sum
 
   /** Eight daemon threads, all started on the first footer read and kept
-    * for the JVM's life. `ThreadUtils.parmap` started and stopped a pool
-    * of its own on every call. */
+    * for the JVM's life, so a footer read starts no thread: a pool per
+    * call (`ThreadUtils.parmap`) starts and stops eight each time. */
   private lazy val footerPool: ExecutionContext = {
     val pool = ThreadUtils.newDaemonFixedThreadPool(8, "graft-footers")
     pool.prestartAllCoreThreads()

@@ -96,6 +96,9 @@ class ForkFreeLocalFsSpec extends SparkTestBase {
   test("store writes and checkpointed streams start no process") {
     val src = twoFileSource()
     writes(tmpDir("ffs-warm"), src)   // class loading and first-use setup
+    // Spark forks `getconf PAGESIZE` once per JVM, in this class's
+    // initializer, at its first executor-metrics poll
+    Class.forName("org.apache.spark.executor.ProcfsMetricsGetter$")
     // the probe does see a process start
     assert(JfrProbe.processStarts(new ProcessBuilder("true").start().waitFor()).size == 1)
     val root = tmpDir("ffs-forks")
