@@ -36,7 +36,18 @@ import org.apache.spark.sql.SparkSession
   * per JVM and user, whatever the conf. One created before the session
   * (by a `FileSystem.get` under a plain `Configuration`) keeps the stock
   * class for that JVM, and only FileContext, which builds its file
-  * system afresh from the conf, goes fork-free. */
+  * system afresh from the conf, goes fork-free.
+  *
+  * The context's Hadoop conf ships without its per-property source list
+  * (`graft.HadoopConfTrim`, a driver plugin that runs once as the
+  * SparkContext starts, before any work). Spark serializes that conf for
+  * every parquet scan and into every write stage's tasks, and Hadoop
+  * gzips each property's sources, one native `Deflater` per string: the
+  * session's 1,078 properties wrote in about 6 ms and read back in about
+  * 5 ms, against under 1 ms each without the sources. Values are
+  * untouched. Two caveats: `getPropertySources` returns null for every
+  * default key (only keys set after the start name a source), and a
+  * SparkContext created outside `GraftSession` keeps its sources. */
 object GraftSession {
   def builder(cores: Int = Runtime.getRuntime.availableProcessors(),
               appName: String = "graft"): SparkSession.Builder =
@@ -61,6 +72,8 @@ object GraftSession {
       // in-process chmod and link checks for local files (see above)
       .config("spark.hadoop.fs.file.impl", "graft.io.ForkFreeLocalFileSystem")
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", "graft.io.ForkFreeLocalFs")
+      // the Hadoop conf without its per-property sources (see above)
+      .config("spark.plugins", "graft.HadoopConfTrim")
 
   def local(cores: Int = 4, appName: String = "graft"): SparkSession = {
     val s = builder(cores, appName).getOrCreate()
