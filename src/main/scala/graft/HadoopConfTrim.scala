@@ -27,15 +27,11 @@ class HadoopConfTrim extends SparkPlugin {
 object HadoopConfTrim {
   private val log = LoggerFactory.getLogger(classOf[HadoopConfTrim])
 
-  /** Hadoop's map from each property to the resources that set it. */
-  private[graft] val SourcesField = "updatingResource"
-
-  /** Clears `conf`'s property sources; values are untouched. Hadoop keeps
-    * one source array per property and gzips each of its strings, one
-    * native `Deflater` apiece, whenever the conf is written (every parquet
-    * scan's broadcast conf, every write stage's task binary), and gunzips
-    * them on every read. Nothing on the engine's paths reads the sources:
-    * they only back `getPropertySources`.
+  /** Clears `conf`'s property sources, Hadoop's map from each property to
+    * the resources that set it (`field`); values are untouched. Nothing on
+    * the engine's paths reads the sources, which only back
+    * `getPropertySources`, and writing them costs one gzip per string
+    * (see `GraftSession`).
     *
     * A default resource added later (a class such as `JobConf` or
     * `DistributedFileSystem` initialised for the first time) reloads every
@@ -46,7 +42,7 @@ object HadoopConfTrim {
     *
     * Returns false, logs one WARN naming the field and leaves `conf` as it
     * is when that fails (a Hadoop without the field); never throws. */
-  def dropSources(conf: Configuration, field: String = SourcesField): Boolean =
+  def dropSources(conf: Configuration, field: String = "updatingResource"): Boolean =
     try {
       new JobConf(conf)
       FileSystem.getFileSystemClass("file", conf)
